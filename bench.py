@@ -145,29 +145,63 @@ LOAD_GATE_MAX_WAIT_SEC = 120.0
 LOAD_GATE_STEAL_JPS = 5.0
 
 
+#: Length of the steal sample every gate pass takes, even on a quiet host.
+LOAD_GATE_SAMPLE_SEC = 5.0
+
+
 def _load_gate() -> float:
+    """Seconds spent in the gate: whole steal samples, so at least
+    ``LOAD_GATE_SAMPLE_SEC``. The loadavg is read at the END of each sample,
+    so the check and the steal rate describe the same moment."""
     waited = 0.0
     while waited < LOAD_GATE_MAX_WAIT_SEC:
-        la = _loadavg()
         s0 = _steal_jiffies()
-        time.sleep(5.0)
-        waited += 5.0
+        time.sleep(LOAD_GATE_SAMPLE_SEC)
+        waited += LOAD_GATE_SAMPLE_SEC
+        la = _loadavg()
         load_ok = la is None or la[0] <= LOAD_GATE_1M
         s1 = _steal_jiffies() if s0 is not None else None
-        steal_ok = s1 is None or (s1 - s0) / 5.0 < LOAD_GATE_STEAL_JPS
+        steal_ok = (
+            s1 is None or (s1 - s0) / LOAD_GATE_SAMPLE_SEC < LOAD_GATE_STEAL_JPS
+        )
         if load_ok and steal_ok:
             break
     return waited
+
+
+def _time_oracle(con, sql: str) -> tuple[float, str]:
+    """Time one DuckDB oracle query on a warm connection; return (seconds,
+    estimator). Protocol: 1 warmup, then cheap oracles the median of 3
+    (``median3``, unchanged since round 12) and expensive oracles (first
+    sample >= 5 s) the MIN of 2 (``min2``, round 14, declared in
+    OPTIMIZATION_r14.md): a SINGLE draw of an 80-140 s query was the
+    dominant remaining ratio variance (ngram's oracle swung 83-144 s between
+    otherwise-quiet runs; the noise — hypervisor steal, buffer-cache cold
+    paths — is strictly one-sided). One more sample and MIN of the two
+    halves the spread at the cost of one extra expensive run."""
+    con.execute(sql).fetchdf()  # warm-up
+    samples = []
+    t0 = time.perf_counter()
+    con.execute(sql).fetchdf()
+    samples.append(time.perf_counter() - t0)
+    if samples[0] < 5.0:
+        for _ in range(2):
+            t0 = time.perf_counter()
+            con.execute(sql).fetchdf()
+            samples.append(time.perf_counter() - t0)
+        return round(statistics.median(samples), 4), "median3"
+    t0 = time.perf_counter()
+    con.execute(sql).fetchdf()
+    samples.append(time.perf_counter() - t0)
+    return round(min(samples), 4), "min2"
 
 
 def _oracle_child(in_path: str, out_path: str) -> int:
     """Child-process mode: time the DuckDB oracle queries in an isolated
     process (VERDICT r13 #2 — the control previously shared the bench
     session's process, so Spark-side GC/thread activity contaminated the
-    ratio denominator). Protocol: warm connection, 1 warmup, adaptive run
-    count — cheap oracles a median of 3 (unchanged since round 12);
-    expensive oracles (first sample >= 5 s) a MIN of 2 instead of a single
-    draw (round 14, declared in OPTIMIZATION_r14.md)."""
+    ratio denominator), each by ``_time_oracle``. Writes
+    ``{"sec": {name: s}, "estimator": {name: "median3" | "min2"}}``."""
     import duckdb
 
     spec = json.loads(Path(in_path).read_text())
@@ -180,34 +214,14 @@ def _oracle_child(in_path: str, out_path: str) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{spec['sf_dir']}/{t}.parquet')"
         )
-    result: dict[str, float] = {}
+    result: dict[str, dict] = {"sec": {}, "estimator": {}}
     for name, sql in spec["queries"].items():
         try:
-            con.execute(sql).fetchdf()  # warm-up
-            samples = []
-            t0 = time.perf_counter()
-            con.execute(sql).fetchdf()
-            samples.append(time.perf_counter() - t0)
-            if samples[0] < 5.0:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    con.execute(sql).fetchdf()
-                    samples.append(time.perf_counter() - t0)
-                result[name] = round(statistics.median(samples), 4)
-            else:
-                # Expensive oracle (round 14, declared measurement fix):
-                # a SINGLE draw of an 80-140 s query was the dominant
-                # remaining ratio variance (ngram's oracle swung 83-144 s
-                # between otherwise-quiet runs; the noise — hypervisor
-                # steal, buffer-cache cold paths — is strictly one-sided).
-                # One more sample and MIN of the two halves the spread at
-                # the cost of one extra expensive run.
-                t0 = time.perf_counter()
-                con.execute(sql).fetchdf()
-                samples.append(time.perf_counter() - t0)
-                result[name] = round(min(samples), 4)
+            sec, estimator = _time_oracle(con, sql)
         except Exception:  # pragma: no cover - oracle-side failure
             continue
+        result["sec"][name] = sec
+        result["estimator"][name] = estimator
     Path(out_path).write_text(json.dumps(result))
     return 0
 
@@ -294,6 +308,7 @@ def main() -> int:
     # run count); in-process fallback if the subprocess fails.
     # Disable: SPARK_GRAFT_BENCH_ORACLE=0.
     oracle_sec: dict[str, float] = {}
+    oracle_estimator: dict[str, str] = {}
     steal_oracle = None
     if os.environ.get("SPARK_GRAFT_BENCH_ORACLE", "1") != "0":
         steal1 = _steal_jiffies()
@@ -323,7 +338,9 @@ def main() -> int:
                     capture_output=True,
                 ).returncode
                 if rc == 0 and Path(out_path).exists():
-                    oracle_sec = json.loads(Path(out_path).read_text())
+                    out = json.loads(Path(out_path).read_text())
+                    oracle_sec = out["sec"]
+                    oracle_estimator = out["estimator"]
         except Exception:  # pragma: no cover - subprocess unavailable
             oracle_sec = {}
         if not oracle_sec:  # pragma: no cover - in-process fallback
@@ -341,28 +358,11 @@ def main() -> int:
                     )
                 for name, sql in oracle_spec["queries"].items():
                     try:
-                        con.execute(sql).fetchdf()  # warm-up
-                        samples = []
-                        t0 = time.perf_counter()
-                        con.execute(sql).fetchdf()
-                        samples.append(time.perf_counter() - t0)
-                        if samples[0] < 5.0:
-                            for _ in range(2):
-                                t0 = time.perf_counter()
-                                con.execute(sql).fetchdf()
-                                samples.append(time.perf_counter() - t0)
-                            oracle_sec[name] = round(
-                                statistics.median(samples), 4
-                            )
-                        else:
-                            # min-of-2 for expensive oracles — see
-                            # _oracle_child for the rationale
-                            t0 = time.perf_counter()
-                            con.execute(sql).fetchdf()
-                            samples.append(time.perf_counter() - t0)
-                            oracle_sec[name] = round(min(samples), 4)
+                        sec, estimator = _time_oracle(con, sql)
                     except Exception:  # pragma: no cover
                         continue
+                    oracle_sec[name] = sec
+                    oracle_estimator[name] = estimator
             except Exception:  # pragma: no cover - duckdb unavailable
                 pass
         steal_oracle = _steal_delta_sec(steal1)
@@ -441,11 +441,18 @@ def main() -> int:
         # same-process DuckDB oracle medians at sf_dir (empty when duckdb
         # is unavailable or disabled) — read ratio = presplit/oracle
         "oracle_sec": oracle_sec,
+        # per-query oracle estimator, "median3" or "min2" (_time_oracle):
+        # the Spark numerator is always a median of TIMED_RUNS
+        "oracle_estimator": oracle_estimator,
         "spark_oracle_ratio": ratio_total,
         "ratios": ratios,
         "loadavg_start": load_start,
         "loadavg_end": load_end,
         "load_gate_wait_sec": load_gate_wait,
+        # the gate's wait includes one steal sample even on a quiet host;
+        # blocked = the part of the wait the gate held the run back
+        "load_gate_sample_sec": LOAD_GATE_SAMPLE_SEC,
+        "load_gate_blocked_sec": load_gate_wait - LOAD_GATE_SAMPLE_SEC,
         "steal_asgiven_sec": steal_asgiven,
         "steal_oracle_sec": steal_oracle,
         "steal_presplit_sec": steal_presplit,
@@ -492,6 +499,7 @@ def main() -> int:
         "steal_presplit_sec": steal_presplit,
         "steal_oracle_sec": steal_oracle,
         "load_gate_wait_sec": load_gate_wait,
+        "load_gate_blocked_sec": load_gate_wait - LOAD_GATE_SAMPLE_SEC,
         "queries": {n: round(t, 3) for n, t in spark_sec.items()},
         "ratios": ratios,
         "full": str(full_path),

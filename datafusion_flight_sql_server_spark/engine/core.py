@@ -131,119 +131,62 @@ class Engine:
         return self.sql_to_plan(sql, params)
 
     def execute_stream(self, df: DataFrame, batch_rows: int = 65536):
-        """Yield the result as Arrow record batches with bounded driver memory.
+        """Yield the result as Arrow record batches, in partition order, with
+        bounded driver memory.
 
-        Parity: the reference pipes batch-at-a-time (service.rs:186-236) and
-        never materializes the full result (SURVEY §7 H1). Two properties:
+        Parity: the reference pipes DataFusion's ``SendableRecordBatchStream``
+        straight into Flight (service.rs:186-191,224-236) and never
+        materializes the full result (SURVEY §7 H1). Here the stream is
+        Spark's OWN Arrow batches: ``_jvm_arrow_batches`` pulls the
+        JVM-encoded IPC messages of ``Dataset.toArrowBatchRdd`` to the
+        driver, so every batch is encoded once, in the JVM, and no Python
+        worker runs. The driver decodes whole batches against the schema
+        ``DataFrame.toArrow`` uses and re-chunks them to ``batch_rows`` with
+        zero-copy slices (``_rechunk``); it never touches individual cells.
 
-        - **Arrow end-to-end**: executors serialize their own columnar
-          batches to IPC via ``mapInArrow`` (``_ipc_encode_batches``); the
-          driver never touches individual cells — it deserializes whole
-          batches and re-chunks to ``batch_rows`` with zero-copy slices.
-          This matches the reference's batch-at-a-time RecordBatch pipe
-          (service.rs:186-191) instead of moving every value through Python
-          dicts (the round-2 per-row ``asDict``/``from_pylist`` path, which
-          capped DoGet throughput at driver-CPU row decode speed).
-        - **Bounded memory**: ``toLocalIterator`` pulls one partition at a
-          time, so peak driver memory is one partition of IPC blobs + the
-          re-chunk buffer — a 1000-executor result streams through a bounded
-          window instead of landing whole on the driver the way
-          ``collect()``/``toArrow()`` would.
+        ``toArrow()`` and its ``collectAsArrowToPython`` collector are NOT
+        used: they write batches in task-completion order and send the
+        partition order only after the last batch, so an ordered stream
+        would have to buffer the whole result on the driver first.
 
-        The driver pulls partitions in ADAPTIVELY-GROWING GROUPS via
-        ``sc.runJob`` rather than ``toLocalIterator``: the iterator runs one
-        Spark job per partition, and at local job-launch latency (~100 ms)
-        a 32-partition result paid ~3 s of pure scheduling — measured 40x
-        the cost of the query itself on a small result (round-6 serving
-        profile; the whole prepared-statement round trip was 3.2 s). A
-        1-partition probe gives low first-byte latency, then groups grow
-        x4 while pulled bytes stay small — so job count is O(log n) on
-        small results. Growth is bounded by OBSERVED partition sizes:
-        every group is capped so group x 2 x largest-partition-seen fits
-        the 128 MB budget, holding EXPECTED group bytes under half the
-        budget. No observation-based scheme can bound an arbitrary size
-        cliff (partitions suddenly far larger than anything observed),
-        but gradual growth means a cliff is met by a small group first —
-        vs one whole partition of exposure for ``toLocalIterator``.
+        Bounded memory: partitions are pulled in adaptively growing groups
+        (``_grouped_pull``), one ``runJob`` per group. The first group is one
+        partition, for low first-byte latency; groups then grow while pulled
+        bytes stay small, so a small result costs O(log n) jobs rather than
+        the one job per partition of ``toLocalIterator`` (~100 ms each
+        locally). Every group is capped from OBSERVED sizes to keep its
+        expected bytes under half the 128 MB ``_PULL_BUDGET``, and reserves
+        its estimate from the shared ``_PULL_POOL`` until the consumer has
+        taken its batches, so concurrent streams share one driver budget.
 
-        Spark Connect has no RDD API, so it streams the same executor-encoded
-        IPC blobs through ``toLocalIterator`` — which under Connect is NOT
-        the classic one-job-per-partition loop: the Connect server executes
-        the plan once and streams result batches over gRPC, with client-side
-        prefetch bounding driver memory. Only the grouped-pull batching is
-        classic-mode specific; the Arrow path is shared.
+        Spark Connect has no JVM handle, so there executors IPC-encode their
+        batches with ``mapInArrow`` and the result streams through
+        ``toLocalIterator``, which under Connect executes the plan once and
+        streams batches over gRPC with client-side prefetch.
+
         The row-at-a-time fallback is reserved for plans whose types cannot
-        pass Spark's Arrow conversion at all. Each path probes through empty
-        partitions to the FIRST NON-EMPTY pull inside its try scope: a
-        runtime Arrow-conversion failure only surfaces when a batch is
-        actually converted, and falling back is only safe before any batch
-        has been yielded — a failure after the first successful pull
-        propagates instead.
+        pass Spark's Arrow conversion at all. Each path pulls through empty
+        partitions to the FIRST BATCH inside its try scope: a runtime
+        Arrow-conversion failure only surfaces when a batch is actually
+        converted, and falling back is only safe before any batch has been
+        yielded; a failure after that propagates.
         """
         from datafusion_flight_sql_server_spark.plans.schema import (
             arrow_schema_for_df,
         )
 
         schema = arrow_schema_for_df(df)
-
+        source = (
+            _jvm_arrow_batches if _has_spark_context(df) else _connect_arrow_batches
+        )
         try:
-            ipc_df = df.mapInArrow(_make_ipc_encoder(), "ipc binary")
+            batches = source(df)
+            head = next(batches, None)
         except Exception:
             yield from self._execute_stream_rows(df, batch_rows, schema)
             return
-
-        try:
-            rdd = ipc_df.rdd
-            n_parts = rdd.getNumPartitions()
-            sc = df.sparkSession.sparkContext
-        except Exception:
-            # Spark Connect: no RDD access. Arrow IPC blobs still stream
-            # through toLocalIterator (Connect supports mapInArrow +
-            # toLocalIterator), keeping DoGet at batch-decode speed; only
-            # an Arrow-conversion failure drops to the row path.
-            try:
-                it = ipc_df.toLocalIterator(prefetchPartitions=True)
-                head = next(it, None)  # reads through empty partitions
-            except Exception:
-                yield from self._execute_stream_rows(df, batch_rows, schema)
-                return
-            rows = iter(()) if head is None else _chain_row(head, it)
-            yield from _rechunk_ipc_rows(rows, schema, batch_rows)
-            return
-
-        # Probe to the first non-empty pull inside the try: empty partitions
-        # convert nothing, so only a pull that returns rows proves the
-        # Arrow path works. Probe groups stay small (<=8) — they are sized
-        # blind, before any byte observation exists. The probe does NOT
-        # draw from _PULL_POOL: with no observation there is nothing to
-        # account, and an 8-partition probe is the same exposure class as
-        # toLocalIterator's single-partition pull; every sized pull after
-        # it reserves from the shared pool.
-        probe: list = []
-        probed = 0
-        try:
-            group = 1
-            while probed < n_parts and not probe:
-                parts = list(range(probed, min(probed + group, n_parts)))
-                probe.extend(sc.runJob(rdd, list, parts))
-                probed += len(parts)
-                group = min(group * 2, 8)
-        except Exception:
-            yield from self._execute_stream_rows(df, batch_rows, schema)
-            return
-
-        def _rows():
-            yield from probe
-            max_part = max([len(r.ipc) for r in probe] or [1 << 20])
-            yield from _grouped_pull(
-                sc,
-                rdd,
-                list(range(probed, n_parts)),
-                max_part,
-                observed=max(probed, 1),
-            )
-
-        yield from _rechunk_ipc_rows(_rows(), schema, batch_rows)
+        if head is not None:
+            yield from _rechunk(_chain(head, batches), schema, batch_rows)
 
     # -- multi-endpoint partitioned results ---------------------------------
 
@@ -255,8 +198,11 @@ class Engine:
         OUR extension beyond the reference (its FlightInfo always carries one
         endpoint; its own *client* already merges several —
         table-provider/src/lib.rs:43-53): executors IPC-encode their
-        partitions once (same encoder as ``execute_stream``), tagged with
-        ``spark_partition_id``, and the result persists MEMORY_AND_DISK.
+        partitions once with ``mapInArrow`` (``_make_ipc_encoder``), tagged
+        with ``spark_partition_id``, and the result persists MEMORY_AND_DISK.
+        Buckets keep the Python encoder because their exact-size group plan
+        needs per-partition byte counts, which the JVM batch RDD that
+        ``execute_stream`` reads gives only through a Python worker.
         Bucket ``b`` of ``n`` serves partitions with ``pid % n == b``, so
         the union over buckets is exactly the result and buckets are
         disjoint.
@@ -301,9 +247,7 @@ class Engine:
         # its FlightInfo always carries one endpoint) instead of shipping
         # read amplification. Touching sparkSession.sparkContext does not
         # finalize the AQE plan, so the laziness contract above holds.
-        try:
-            df.sparkSession.sparkContext
-        except Exception:  # pragma: no cover - Connect session
+        if not _has_spark_context(df):  # pragma: no cover - Connect session
             n_buckets = 1
         return staged, n_buckets
 
@@ -341,7 +285,7 @@ class Engine:
                 )
             )
             rows = src.toLocalIterator(prefetchPartitions=True)
-            yield from _rechunk_ipc_rows(rows, schema, batch_rows)
+            yield from _rechunk(_ipc_row_batches(rows), schema, batch_rows)
             return
 
         mine = [p for p in range(n_parts) if p % n_buckets == bucket]
@@ -370,8 +314,8 @@ class Engine:
             mine, [part_bytes[p] for p in mine], budget=_PULL_BUDGET
         )
         group_bytes = [sum(part_bytes[p] for p in g) for g in groups]
-        yield from _rechunk_ipc_rows(
-            _pull_planned_groups(sc, rdd, groups, group_bytes),
+        yield from _rechunk(
+            _ipc_row_batches(_pull_planned_groups(sc, rdd, groups, group_bytes)),
             schema,
             batch_rows,
         )
@@ -735,10 +679,20 @@ def _sql_like(value: str, pattern: str) -> bool:
     return re.fullmatch("".join(out), value) is not None
 
 
-def _chain_row(head, rest):
-    """Re-attach the probed first row to the remaining iterator."""
+def _chain(head, rest):
+    """Re-attach the probed first item to the remaining iterator."""
     yield head
     yield from rest
+
+
+def _has_spark_context(df) -> bool:
+    """False under Spark Connect, which has no SparkContext (and no RDD or
+    JVM handle). Touching it does not finalize the AQE plan."""
+    try:
+        df.sparkSession.sparkContext
+    except Exception:
+        return False
+    return True
 
 
 # Driver-memory budget per result-pull GROUP, shared by BOTH serving
@@ -821,54 +775,104 @@ class _PullBudgetPool:
 _PULL_POOL = _PullBudgetPool(_PULL_POOL_TOTAL)
 
 
-def _grouped_pull(
-    sc, rdd, parts: list, max_part: int, group: int = 4, observed: int = 1
-):
-    """Pull ``parts`` of ``rdd`` in adaptively-growing ``sc.runJob`` groups
-    (the UNCACHED ``execute_stream`` path; the persisted bucket streams
-    plan groups from exact sizes via ``_sized_partitions`` instead).
+def _grouped_pull(pull, n_parts: int):
+    """Yield the messages of partitions ``0..n_parts-1``, in partition order,
+    pulled by ``pull(parts) -> list`` in adaptively growing groups.
 
-    Every group is capped so group x 2 x largest-partition-OBSERVED fits
-    the 128 MB budget: expected group bytes stay under half the budget.
-    Growth is x4 while pulled bytes stay small (job-launch latency
-    dominates small results — ~100 ms/job locally). Two backstops bound a
-    size cliff in LATER partitions (unobservable without recomputing the
-    uncached pipeline for a sizes pass): the group never exceeds the
-    number of partitions already observed + 1 (so the byte cap's
-    denominator rests on a real sample at least as large as the group —
-    one tiny partition 0 can no longer license a 64-partition pull), and
-    an over-budget pull drops straight to group=1 (re-growing from the
-    cliff's own observed sizes) instead of halving. Residual exposure is
-    one group sized before the cliff was visible; a hard bound would
-    require executor-side size metadata, which for an uncached result
+    The first group is one partition; a stream that must read through
+    empty leading partitions keeps growing until its first non-empty pull.
+    Every group is capped so group x 2 x ``max_part`` fits the 128 MB
+    budget, where ``max_part`` is the largest of a 1 MB floor, the largest
+    message seen and the mean partition bytes of any pulled group:
+    expected group bytes stay under half the budget. Growth is x4 while
+    pulled bytes stay small (job-launch latency dominates small results,
+    ~100 ms/job locally). Two backstops bound a size cliff in LATER
+    partitions (unobservable without computing the uncached pipeline
+    twice): the group never exceeds the number of partitions already
+    observed + 1, so the byte cap rests on a sample at least as large as
+    the group, and an over-budget pull drops straight to group=1
+    (re-growing from the cliff's own sizes) instead of halving. Residual
+    exposure is one group sized before the cliff was visible; a hard bound
+    would need executor-side size metadata, which for an uncached result
     costs a full extra compute pass.
+
+    Each group reserves its expected bytes from the shared ``_PULL_POOL``
+    and holds them until the consumer has taken the group's messages.
     """
     budget = _PULL_BUDGET
-    start = 0
-    while start < len(parts):
+    max_part = 1 << 20
+    start = observed = 0
+    group = 1
+    while start < n_parts:
         group = max(
             1, min(group, observed + 1, budget // max(2 * max_part, 1), 64)
         )
-        chunk = parts[start : start + group]
-        # aggregate accounting: reserve this group's EXPECTED bytes (the
-        # same 2 x largest-observed estimate the cap rests on) from the
-        # shared pool so concurrent streams cannot stack N full budgets
-        # on the driver; held until downstream consumed the group
+        chunk = list(range(start, min(start + group, n_parts)))
         take = _PULL_POOL.acquire(min(2 * max_part * len(chunk), budget))
         try:
-            rows = sc.runJob(rdd, list, chunk)
-            yield from rows
+            msgs = pull(chunk)
+            yield from msgs
         finally:
             _PULL_POOL.release(take)
         start += len(chunk)
         observed += len(chunk)
-        nbytes = sum(len(r.ipc) for r in rows)
-        if rows:
-            max_part = max(max_part, max(len(r.ipc) for r in rows))
+        nbytes = sum(map(len, msgs))
+        if msgs:
+            max_part = max(max_part, max(map(len, msgs)), nbytes // len(chunk))
         if nbytes > budget:
             group = 1
         elif nbytes < (32 << 20):
             group = min(group * 4, 64)
+
+
+def _jvm_arrow_batches(df):
+    """Yield ``df``'s Arrow record batches as Spark's JVM encodes them, in
+    partition order, through ``_grouped_pull``.
+
+    The one place that uses PySpark internals (checked against PySpark
+    4.1.2 by ``tests/test_serving_internals.py``):
+
+    - ``Dataset.toArrowBatchRdd`` — an RDD of Arrow IPC record-batch
+      messages, encoded by the executors' JVM (no Python worker);
+    - ``PythonRDD.runJob`` — one job over a partition group, its elements
+      served on a local socket in partition order;
+    - ``_load_from_socket`` with ``NoOpSerializer`` — reads those
+      length-framed messages as ``bytes``.
+
+    Each message is decoded against the schema ``DataFrame.toArrow`` uses,
+    so the batches equal its table. Like ``df.rdd``, building the RDD
+    finalizes the AQE plan.
+    """
+    import pyarrow as pa
+    from pyspark.core.rdd import _load_from_socket
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    schema = to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+    )
+    jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+
+    def pull(parts: list) -> list:
+        sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
+        return list(_load_from_socket(sock, NoOpSerializer()))
+
+    for msg in _grouped_pull(pull, jrdd.getNumPartitions()):
+        yield pa.ipc.read_record_batch(pa.py_buffer(msg), schema)
+
+
+def _connect_arrow_batches(df):
+    """Spark Connect form of ``_jvm_arrow_batches``: executors IPC-encode
+    their batches with ``mapInArrow`` and the rows stream through
+    ``toLocalIterator``."""
+    rows = df.mapInArrow(_make_ipc_encoder(), "ipc binary").toLocalIterator(
+        prefetchPartitions=True
+    )
+    return _ipc_row_batches(rows)
 
 
 def _sized_partitions(sc, rdd, parts: list) -> list:
@@ -951,34 +955,42 @@ def _make_ipc_encoder():
     return _ipc_encode_batches
 
 
-def _rechunk_ipc_rows(rows, schema, batch_rows: int):
-    """Decode driver-side rows of IPC blobs into ``batch_rows``-sized Arrow
-    batches with zero-copy slicing (shared by ``execute_stream`` and the
-    multi-endpoint bucket streams)."""
+def _ipc_row_batches(rows):
+    """Decode rows of one-batch IPC streams (``_make_ipc_encoder`` output)."""
     import pyarrow as pa
 
+    for row in rows:
+        yield from pa.ipc.open_stream(row.ipc)
+
+
+def _rechunk(batches, schema, batch_rows: int):
+    """Re-chunk Arrow record batches into ``batch_rows``-sized batches of
+    ``schema`` (cast when the types differ, e.g. large string types), with
+    zero-copy slicing. Shared by every serving path."""
+    import pyarrow as pa
+
+    target = pa.schema([f.remove_metadata() for f in schema])
     buf: list[pa.RecordBatch] = []
     buffered = 0
-    for row in rows:
-        for batch in pa.ipc.open_stream(row.ipc):
-            if batch.num_rows == 0:
-                continue
-            if not batch.schema.equals(schema, check_metadata=False):
-                batch = (
-                    pa.Table.from_batches([batch])
-                    .cast(pa.schema([f.remove_metadata() for f in schema]))
-                    .combine_chunks()
-                    .to_batches()[0]
-                )
-            buf.append(batch)
-            buffered += batch.num_rows
-            while buffered >= batch_rows:
-                tbl = pa.Table.from_batches(buf).combine_chunks()
-                yield tbl.slice(0, batch_rows).to_batches()[0]
-                rest = tbl.slice(batch_rows)
-                buf = rest.to_batches()
-                buffered = rest.num_rows
-    if buffered:
-        tbl = pa.Table.from_batches(buf).combine_chunks()
-        for batch in tbl.to_batches(max_chunksize=batch_rows):
-            yield batch
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if not batch.schema.equals(schema, check_metadata=False):
+            batch = batch.cast(target)
+        buf.append(batch)
+        buffered += batch.num_rows
+        while buffered >= batch_rows:
+            head = buf[0] if len(buf) == 1 else _combine(buf)
+            yield head.slice(0, batch_rows)
+            rest = head.slice(batch_rows)
+            buf = [rest] if rest.num_rows else []
+            buffered = rest.num_rows
+    if buf:
+        yield buf[0] if len(buf) == 1 else _combine(buf)
+
+
+def _combine(batches: list):
+    """One contiguous record batch from several of the same schema."""
+    import pyarrow as pa
+
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]

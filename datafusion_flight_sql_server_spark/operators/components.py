@@ -199,7 +199,19 @@ def connected_components_star(
     propagation needs diameter rounds. Raises if ``max_iter`` rounds do not
     reach the fixed point (each round provably contracts, so this only
     fires on a too-small max_iter).
+
+    The fixed point is detected by comparing two consecutive round
+    outputs, so even an empty input or one that is already a depth-1
+    min-star forest takes 2 rounds: ``max_iter`` must be at least 2
+    (``ValueError`` otherwise), and ``with_rounds`` counts 2 rounds for
+    such an input although its first round changes nothing (the second
+    round only confirms the fixed point: a +1 on already-star inputs).
     """
+    if max_iter < 2:
+        raise ValueError(
+            "connected_components_star: max_iter must be >= 2 (the fixed "
+            f"point takes two round outputs to detect), got {max_iter}"
+        )
     # Lineage MUST be truncated each round, not just cached: every star
     # round references its input ~3x, so the logical plan grows ~9x per
     # round and analysis cost explodes exponentially by round ~6 (measured:

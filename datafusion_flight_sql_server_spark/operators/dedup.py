@@ -178,6 +178,9 @@ _MINHASH_FRONTEND_MAX = 4
 #: eager count exists to eliminate. Hit-path callers wait on the entry's
 #: Event; the creator sets it in a finally so waiters never hang.
 _MINHASH_READY: dict = {}
+#: How long a cache hit waits for another thread's materialization before
+#: it raises ``TimeoutError`` instead of reading unmaterialized blocks.
+_MINHASH_READY_TIMEOUT_S = 300.0
 #: Guards lookup+insert as one unit: the Flight server handles requests on
 #: concurrent threads over one shared session, and an unguarded miss-miss
 #: race double-creates the front end — the loser's persisted relation is
@@ -315,8 +318,14 @@ def _minhash_hashed_buckets(
     elif ready is not None and not ready.is_set():
         # another thread's materializing count() is in flight — wait for
         # the blocks to land instead of racing AQE futures against them
-        # (bounded wait: a failed creator sets the event in its finally)
-        ready.wait(timeout=300.0)
+        # (bounded wait: a failed creator sets the event in its finally;
+        # a wait that runs out must not proceed on unmaterialized blocks)
+        if not ready.wait(timeout=_MINHASH_READY_TIMEOUT_S):
+            raise TimeoutError(
+                f"MinHash front end {cache_key!r} was not materialized "
+                f"within {_MINHASH_READY_TIMEOUT_S:.0f} s by the thread "
+                "building it"
+            )
     return out
 
 

@@ -21,8 +21,13 @@ datafusion-flight-sql-server/src/service.rs:194-1014) on
   (service.rs:1107-1121); auth failures surface as UNAUTHENTICATED from the
   middleware (examples/bearer_auth_flight_sql.rs:95-114).
 
-Results stream batch-at-a-time via ``Engine.execute_stream`` — the driver
-never holds a whole result (service.rs:186-191 behavior; SURVEY §7 H1).
+Results stream batch-at-a-time via ``Engine.execute_stream``, in partition
+order, and the driver never holds a whole result (service.rs:186-191
+behavior; SURVEY §7 H1). The batches are Spark's own JVM-encoded Arrow
+batches, pulled in byte-budgeted partition groups; no Python worker runs.
+``toArrow()``/``collectAsArrowToPython`` are not used: they deliver batches
+in completion order and the order only at the end, so an ordered stream
+would buffer the whole result on the driver.
 
 Declared divergences (client-compat debugging starts here):
 

@@ -7,6 +7,8 @@ component isolation, and min-id labeling.
 
 import random
 
+import pytest
+
 from datafusion_flight_sql_server_spark.operators.components import (
     connected_components,
     connected_components_star,
@@ -84,6 +86,28 @@ class TestStarContraction:
         labels.unpersist()
         # self-loop-only nodes label themselves; direction is irrelevant
         assert got == {(2, 2), (9, 2), (5, 5), (3, 3)}
+
+    def test_max_iter_below_two_rejected_up_front(self, spark):
+        # the fixed point needs two round outputs; max_iter=1 used to fail
+        # later with a misleading "no fixed point" error
+        edges = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+        with pytest.raises(ValueError, match="max_iter must be >= 2"):
+            connected_components_star(edges, max_iter=1)
+
+    def test_already_star_input_takes_two_rounds(self, spark):
+        # a depth-1 min-star forest is already the fixed point: round 1
+        # changes nothing and round 2 confirms it, so max_iter=2 suffices
+        # and with_rounds reports 2
+        edges = spark.createDataFrame(
+            [(2, 1), (3, 1), (7, 5)], "src bigint, dst bigint"
+        )
+        labels, rounds = connected_components_star(
+            edges, max_iter=2, with_rounds=True
+        )
+        got = {(r.node, r.cluster_id) for r in labels.collect()}
+        labels.unpersist()
+        assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (7, 5)}
+        assert rounds == 2
 
 
 class TestDedupKeepBest:

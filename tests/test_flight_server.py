@@ -499,6 +499,27 @@ class TestScaleServing:
         assert pc.sum(table.column("id")).as_py() == n * (n - 1) // 2
         assert len(table.column("id").chunks) > 1
 
+    def test_doget_runs_no_python_worker(self, spark, client, monkeypatch):
+        # The default DoGet path streams Spark's JVM-encoded Arrow batches:
+        # mapInArrow (a Python worker per partition) is never called, and a
+        # multi-partition statement returns every row, in order. The call
+        # is recorded because the row fallback would swallow a raise.
+        calls = []
+
+        def _no_worker(*a, **k):
+            calls.append(a)
+            raise AssertionError("mapInArrow used on the DoGet path")
+
+        # the session's concrete DataFrame class defines mapInArrow itself
+        monkeypatch.setattr(type(spark.range(0)), "mapInArrow", _no_worker)
+        spark.range(0, 50_000, 1, 6).createOrReplaceTempView("nopyworker")
+        table = client.execute(
+            "SELECT id, CAST(id AS STRING) AS s FROM nopyworker ORDER BY id"
+        )
+        assert not calls, "mapInArrow ran on the DoGet path"
+        assert table.column("id").to_pylist() == list(range(50_000))
+        assert table.column("s").to_pylist()[-1] == "49999"
+
     def test_concurrent_clients_isolated(self, server):
         # N parallel DoGets, each its own TCP client and its own filter
         # constant: every stream must return exactly its own answer

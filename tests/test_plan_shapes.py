@@ -836,6 +836,39 @@ class TestMinhashFrontendCache:
         finally:
             clear_minhash_frontend_cache()
 
+    def test_cache_hit_wait_timeout_raises_naming_key(
+        self, spark, monkeypatch
+    ):
+        # ROADMAP D.3: a cache hit whose wait for another thread's
+        # materialization runs out must raise, naming the key, instead of
+        # proceeding on blocks that were never materialized
+        from datafusion_flight_sql_server_spark.operators import dedup
+        from datafusion_flight_sql_server_spark.queries.catalog import tables
+        from tests.conftest import SF_SMALL
+
+        class _NeverReady:
+            def is_set(self):
+                return False
+
+            def wait(self, timeout=None):
+                return False
+
+        d = tables(spark, SF_SMALL)["documents"]
+        dedup.clear_minhash_frontend_cache()
+        cache_key = ("stalled", "documents")
+        try:
+            dedup._minhash_hashed_buckets(
+                d, "doc_id", "text", 3, 16, 8, 42, cache_key=cache_key
+            )
+            (key,) = dedup._MINHASH_READY
+            monkeypatch.setitem(dedup._MINHASH_READY, key, _NeverReady())
+            with pytest.raises(TimeoutError, match="stalled"):
+                dedup._minhash_hashed_buckets(
+                    d, "doc_id", "text", 3, 16, 8, 42, cache_key=cache_key
+                )
+        finally:
+            dedup.clear_minhash_frontend_cache()
+
     def test_eval_and_curve_share_one_frontend(self, spark):
         # the threshold curve composes minhash_eval: with the cache primed
         # by eval, the curve's plan reads the persisted relation

@@ -297,16 +297,22 @@ class TestExecuteStream:
         assert table.column("name").to_pylist() == ["Alice", "Bob", "Charlie"]
 
     def test_arrow_path_engaged(self, spark, monkeypatch):
-        # The serving hot path must be the executor-side IPC encode
-        # (mapInArrow), never the row-at-a-time fallback: poison the
-        # fallback and stream a multi-partition, multi-type result.
+        # The serving hot path must be Spark's JVM-encoded Arrow batches:
+        # never the row-at-a-time fallback, and no Python worker
+        # (mapInArrow). Poison both and stream a multi-partition,
+        # multi-type result.
         engine = Engine(spark)
 
         def _boom(*a, **k):
             raise AssertionError("row-at-a-time fallback used on Arrow-able plan")
             yield  # pragma: no cover
 
+        def _no_worker(*a, **k):
+            raise AssertionError("mapInArrow used on the classic DoGet path")
+
         monkeypatch.setattr(engine, "_execute_stream_rows", _boom)
+        # the session's concrete DataFrame class defines mapInArrow itself
+        monkeypatch.setattr(type(spark.range(0)), "mapInArrow", _no_worker)
         df = spark.range(0, 20_000, 1, 4).selectExpr(
             "id",
             "cast(id as double) AS d",
@@ -328,10 +334,11 @@ class TestExecuteStream:
     def test_probe_reads_through_empty_leading_partitions(
         self, spark, monkeypatch
     ):
-        # A selective filter often leaves partition 0 empty; the probe must
-        # read through empties to the first non-empty pull (the round-6
-        # continuation review fix: a [0]-only probe proved nothing about
-        # the Arrow path and mis-sized the group loop).
+        # A selective filter often leaves partition 0 empty; the stream
+        # must pull through empties to the first non-empty group before it
+        # commits to the Arrow path (the round-6 continuation review fix:
+        # a [0]-only probe proved nothing about the Arrow path and
+        # mis-sized the group loop).
         engine = Engine(spark)
 
         def _boom(*a, **k):
@@ -346,17 +353,31 @@ class TestExecuteStream:
         ) == list(range(90, 100))
 
     def test_rddless_session_streams_arrow_not_rows(self, spark, monkeypatch):
-        # Spark Connect has no RDD API: the stream must fall back to the
-        # Arrow toLocalIterator path, NOT the row-at-a-time decode (the
-        # round-6 continuation review found Connect silently degraded).
-        from pyspark.sql import DataFrame
-
+        # Spark Connect has no SparkContext, RDD or JVM handle: the stream
+        # must take the Arrow toLocalIterator path, NOT the row-at-a-time
+        # decode (the round-6 continuation review found Connect silently
+        # degraded).
         engine = Engine(spark)
 
-        def _no_rdd(self):
-            raise Exception("RDD API unsupported (Connect)")
+        class _ConnectLikeDF:
+            """Delegates plan building but denies the SparkContext, like a
+            Connect-session DataFrame."""
 
-        monkeypatch.setattr(DataFrame, "rdd", property(_no_rdd))
+            def __init__(self, df):
+                self._df = df
+                self.schema = df.schema
+
+            def mapInArrow(self, *a, **k):
+                return self._df.mapInArrow(*a, **k)
+
+            @property
+            def sparkSession(self):
+                class _S:
+                    @property
+                    def sparkContext(self):
+                        raise RuntimeError("Connect: no sparkContext")
+
+                return _S()
 
         def _boom(*a, **k):
             raise AssertionError("row-at-a-time fallback used")
@@ -366,10 +387,14 @@ class TestExecuteStream:
         df = spark.range(0, 5_000, 1, 4).selectExpr(
             "id", "cast(id as string) AS s"
         )
-        batches = list(engine.execute_stream(df, batch_rows=1024))
+        batches = list(engine.execute_stream(_ConnectLikeDF(df), batch_rows=1024))
         assert sum(b.num_rows for b in batches) == 5_000
+        assert [v for b in batches for v in b.column("id").to_pylist()] == list(
+            range(5_000)
+        )
         # empty results also resolve through the iterator path
-        assert list(engine.execute_stream(spark.range(10).where("id < 0"))) == []
+        empty = _ConnectLikeDF(spark.range(10).where("id < 0"))
+        assert list(engine.execute_stream(empty)) == []
 
 
 class TestProbePoisoning:

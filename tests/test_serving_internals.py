@@ -4,13 +4,15 @@ These pin the exact contracts the round-7 serving rewrite changed blind
 (VERDICT r7 items #1/#2): ``sc.runJob``'s per-partition FLATTENING of
 returned iterables, the exact-byte group planner's three branches, the
 adaptive ``_grouped_pull`` growth policy, and the pid↔partition-index
-invariant guard's negative case. The fake-SparkContext tests run without a
-JVM so the policy branches stay cheap to exercise; ``_sized_partitions``
-and the guard run against the real session because runJob semantics are
-the thing under test.
+invariant guard's negative case. The fake-pull tests run without a JVM
+so the policy branches stay cheap to exercise; ``_sized_partitions`` and
+the guard run against the real session because runJob semantics are the
+thing under test, and ``_jvm_arrow_batches`` is checked against the
+PySpark internals it uses.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from datafusion_flight_sql_server_spark.engine.core import (
     _PULL_BUDGET,
@@ -33,22 +35,24 @@ class _SizedBytes:
         return self.n
 
 
-class _FakeRow:
-    def __init__(self, n: int):
-        self.ipc = _SizedBytes(n)
+class _FakePull:
+    """Records the partition list of every pull; returns ``per_part``
+    fake messages per requested partition that together have the
+    configured partition size, and none for an empty partition."""
 
-
-class _FakeSC:
-    """Records the partition list of every runJob call; returns one fake
-    row per requested partition with the configured blob size."""
-
-    def __init__(self, sizes: list):
+    def __init__(self, sizes: list, per_part: int = 1):
         self.sizes = sizes
+        self.per_part = per_part
         self.calls: list = []
 
-    def runJob(self, rdd, func, parts):
+    def __call__(self, parts):
         self.calls.append(list(parts))
-        return [_FakeRow(self.sizes[p]) for p in parts]
+        return [
+            _SizedBytes(self.sizes[p] // self.per_part)
+            for p in parts
+            if self.sizes[p]
+            for _ in range(self.per_part)
+        ]
 
 
 # -- _plan_groups_by_bytes ---------------------------------------------------
@@ -86,62 +90,145 @@ class TestPlanGroupsByBytes:
 
 
 class TestGroupedPull:
-    def test_observed_plus_one_caps_first_group(self):
-        # With only the 1-partition probe observed, the first pull may not
-        # exceed 2 partitions even though the default group is 4: the byte
-        # cap's denominator must rest on a sample at least group-sized.
-        sc = _FakeSC([1 * MB] * 12)
-        list(_grouped_pull(sc, None, list(range(12)), max_part=1 * MB))
-        assert len(sc.calls[0]) == 2
+    def test_first_group_is_one_partition(self):
+        # The first pull is sized blind, so it is a single partition; the
+        # next may not exceed observed + 1 = 2 even though growth is x4:
+        # the byte cap must rest on a sample at least group-sized.
+        pull = _FakePull([1 * MB] * 12)
+        list(_grouped_pull(pull, 12))
+        assert [len(c) for c in pull.calls[:2]] == [1, 2]
 
-    def test_probe_observation_carries_over(self):
-        # execute_stream passes observed=probed: a 5-partition probe
-        # licenses the full default group of 4 immediately.
-        sc = _FakeSC([1 * MB] * 12)
-        list(
-            _grouped_pull(
-                sc, None, list(range(12)), max_part=1 * MB, observed=5
-            )
-        )
-        assert len(sc.calls[0]) == 4
+    def test_reads_through_empty_partitions_with_doubling_groups(self):
+        # Empty leading partitions observe no bytes: the observed + 1 cap
+        # makes the groups double (1, 2, 4, 8, ...) until the first
+        # non-empty pull, the probe schedule the stream relies on.
+        pull = _FakePull([0] * 15 + [1024] * 50)
+        first = next(_grouped_pull(pull, 65))
+        assert len(first) == 1024
+        assert pull.calls == [[0], [1, 2], [3, 4, 5, 6], list(range(7, 15)),
+                              list(range(15, 31))]
 
     def test_group_grows_while_small(self):
-        # Tiny pulls quadruple the group (bounded by observed+1) so
-        # job-launch latency amortizes; growth is monotone until caps bind.
-        sc = _FakeSC([1024] * 40)
-        list(_grouped_pull(sc, None, list(range(40)), max_part=1024))
-        lens = [len(c) for c in sc.calls]
-        assert lens[0] == 2
+        # Tiny pulls grow the group (bounded by observed+1) so job-launch
+        # latency amortizes; growth is monotone until caps bind.
+        pull = _FakePull([1024] * 200)
+        list(_grouped_pull(pull, 200))
+        lens = [len(c) for c in pull.calls]
+        assert lens[0] == 1
         # Monotone growth except the final call, which pulls whatever
         # remainder is left.
         body = lens[:-1]
         assert all(b >= a for a, b in zip(body, body[1:]))
-        assert max(lens) > 2
+        assert max(lens) == 64
 
     def test_over_budget_pull_drops_to_one(self):
-        # A size cliff: the pull that blows the budget forces the NEXT
-        # group to exactly 1, not a halving.
-        big = (_PULL_BUDGET // 2) + MB
-        sc = _FakeSC([big] * 6)
-        # max_part lies small, as an observation-based caller's would
-        # before the cliff is visible.
-        list(_grouped_pull(sc, None, list(range(6)), max_part=1 * MB))
-        assert len(sc.calls[0]) == 2  # 2 * big > budget -> over-budget
-        assert len(sc.calls[1]) == 1
+        # A size cliff: seven 1 MB partitions license a group of 8, whose
+        # 17 MB partitions blow the budget. The NEXT group is exactly 1,
+        # not the byte cap's 3 and not a halving.
+        cliff = 17 * MB
+        pull = _FakePull([1 * MB] * 7 + [cliff] * 20)
+        list(_grouped_pull(pull, 27))
+        assert [len(c) for c in pull.calls[:4]] == [1, 2, 4, 8]
+        assert 8 * cliff > _PULL_BUDGET
+        assert len(pull.calls[4]) == 1
+        assert len(pull.calls[5]) == _PULL_BUDGET // (2 * cliff)
 
     def test_byte_cap_from_max_part(self):
-        # Once a large partition is observed, budget // (2 * max_part)
+        # Once a large message is observed, budget // (2 * max_part)
         # bounds every subsequent group.
         half = _PULL_BUDGET // 2
-        sc = _FakeSC([half] * 8)
-        list(_grouped_pull(sc, None, list(range(8)), max_part=half))
-        assert all(len(c) == 1 for c in sc.calls)
+        pull = _FakePull([half] * 8)
+        list(_grouped_pull(pull, 8))
+        assert all(len(c) == 1 for c in pull.calls)
 
-    def test_all_partitions_pulled_exactly_once(self):
-        sc = _FakeSC([1024] * 23)
-        rows = list(_grouped_pull(sc, None, list(range(23)), max_part=1024))
-        assert len(rows) == 23
-        assert [p for c in sc.calls for p in c] == list(range(23))
+    def test_byte_cap_counts_every_message_of_a_partition(self):
+        # A partition arrives as many batch messages: the cap must use the
+        # partition's bytes, not its largest message. Fifteen small
+        # partitions license a group of 16; their 7 MB successors (35
+        # messages of 200 KB each) would then be pulled 112 MB per group
+        # if the cap saw only the largest message.
+        part = 7 * MB
+        pull = _FakePull([MB // 2] * 15 + [part] * 48, per_part=35)
+        list(_grouped_pull(pull, 63))
+        assert [len(c) for c in pull.calls[:5]] == [1, 2, 4, 8, 16]
+        cap = _PULL_BUDGET // (2 * part)
+        assert all(len(c) <= cap for c in pull.calls[5:])
+
+    def test_all_partitions_pulled_exactly_once_in_order(self):
+        pull = _FakePull([1024] * 23)
+        msgs = list(_grouped_pull(pull, 23))
+        assert len(msgs) == 23
+        assert [p for c in pull.calls for p in c] == list(range(23))
+
+
+# -- _jvm_arrow_batches: the PySpark internals it rests on ------------------
+
+
+class TestJvmArrowBatches:
+    """``_jvm_arrow_batches`` uses PySpark internals, written against
+    PySpark 4.1.2. An upgrade that moves one must fail here, naming it,
+    rather than silently sending every DoGet down the row fallback."""
+
+    def _jvm_methods(self, spark, cls: str) -> set:
+        jvm = spark.sparkContext._jvm
+        return {m.getName() for m in jvm.java.lang.Class.forName(cls).getMethods()}
+
+    def test_private_apis_present(self, spark):
+        import pyspark
+
+        where = f"on PySpark {pyspark.__version__} (written against 4.1.2)"
+        try:
+            from pyspark.core.rdd import _load_from_socket  # noqa: F401
+        except ImportError:
+            pytest.fail(f"pyspark.core.rdd._load_from_socket is gone {where}")
+        try:
+            from pyspark.serializers import NoOpSerializer  # noqa: F401
+        except ImportError:
+            pytest.fail(f"pyspark.serializers.NoOpSerializer is gone {where}")
+        assert "toArrowBatchRdd" in self._jvm_methods(
+            spark, "org.apache.spark.sql.classic.Dataset"
+        ), f"Dataset.toArrowBatchRdd is gone {where}"
+        assert "runJob" in self._jvm_methods(
+            spark, "org.apache.spark.api.python.PythonRDD"
+        ), f"PythonRDD.runJob is gone {where}"
+        assert "arrowUseLargeVarTypes" in self._jvm_methods(
+            spark, "org.apache.spark.sql.internal.SQLConf"
+        ), f"SQLConf.arrowUseLargeVarTypes is gone {where}"
+
+    @pytest.mark.parametrize("large_var_types", ["false", "true"])
+    def test_batches_equal_to_arrow(self, spark, large_var_types):
+        import pyarrow as pa
+
+        from datafusion_flight_sql_server_spark.engine.core import (
+            _jvm_arrow_batches,
+        )
+
+        # 8 partitions, the first 4 empty; every listed type, with nulls
+        df = spark.range(0, 8_000, 1, 8).where("id >= 4000").selectExpr(
+            "CAST(id AS INT) AS i",
+            "CAST(id AS DOUBLE) / 3 AS d",
+            "IF(id % 5 = 0, NULL, CAST(id AS STRING)) AS s",
+            "CAST(id AS DECIMAL(12, 2)) / 7 AS dec",
+            "DATE_ADD(DATE'2020-01-01', CAST(id % 400 AS INT)) AS dt",
+            "TIMESTAMP_MICROS(id * 1000003) AS ts",
+            "IF(id % 7 = 0, NULL, ARRAY(id, NULL)) AS arr",
+            "NAMED_STRUCT('a', id, 'b', IF(id % 3 = 0, NULL, 'x')) AS st",
+            "CAST(NULL AS BIGINT) AS nul",
+        )
+        key = "spark.sql.execution.arrow.useLargeVarTypes"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, large_var_types)
+        try:
+            expected = df.toArrow()
+            got = pa.Table.from_batches(
+                list(_jvm_arrow_batches(df)), expected.schema
+            )
+        finally:
+            spark.conf.set(key, saved)
+        assert got.num_rows == 4_000
+        assert got.equals(expected)
+        string_type = pa.large_string() if large_var_types == "true" else pa.string()
+        assert got.schema.field("s").type == string_type
 
 
 # -- _sized_partitions: real runJob flatten semantics ------------------------
@@ -347,10 +434,7 @@ class TestPullBudgetPool:
             def stream():
                 try:
                     barrier.wait()
-                    sc = _FakeSC(sizes)
-                    for _ in _grouped_pull(
-                        sc, None, list(range(8)), max_part=1 * MB
-                    ):
+                    for _ in _grouped_pull(_FakePull(sizes), 8):
                         pass
                 except Exception as exc:  # pragma: no cover
                     errors.append(exc)
@@ -366,13 +450,11 @@ class TestPullBudgetPool:
             core._PULL_POOL = saved
 
     def test_execute_stream_draws_from_shared_pool(self, spark):
-        """The adaptive (uncached) serving path accounts its sized pulls
-        against the same aggregate pool as the bucket streams — only the
-        blind <=8-partition probe is exempt (documented)."""
+        """The adaptive (uncached) serving path accounts every pull against
+        the same aggregate pool as the bucket streams."""
         from datafusion_flight_sql_server_spark.engine import core
 
         eng = Engine(spark)
-        # >8 partitions so pulls continue past the probe window
         df = spark.range(0, 200_000, 1, 24).selectExpr(
             "id", "CAST(id % 7 AS STRING) AS s"
         )
@@ -384,5 +466,47 @@ class TestPullBudgetPool:
         finally:
             core._PULL_POOL = saved
         assert total == 200_000
-        assert pool.peak > 0, "no post-probe pull reserved from the pool"
+        assert pool.peak > 0, "no pull reserved from the pool"
         assert pool.peak <= pool.total
+
+    def test_ordered_result_across_groups_within_budget(
+        self, spark, monkeypatch
+    ):
+        """A result larger than a (shrunken) group budget streams in
+        several pull groups, still in exact ORDER BY order, and the pool's
+        high-water mark stays within that budget."""
+        from datafusion_flight_sql_server_spark.engine import core
+
+        budget = 64 << 10
+        monkeypatch.setattr(core, "_PULL_BUDGET", budget)
+        pool = core._PullBudgetPool(core._PULL_POOL_TOTAL)
+        monkeypatch.setattr(core, "_PULL_POOL", pool)
+        groups = []
+        grouped_pull = core._grouped_pull
+
+        def counting_grouped_pull(pull, n_parts, *a, **k):
+            def counted(parts):
+                msgs = pull(parts)
+                groups.append(len(msgs))
+                return msgs
+
+            return grouped_pull(counted, n_parts, *a, **k)
+
+        monkeypatch.setattr(core, "_grouped_pull", counting_grouped_pull)
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "false")  # keep the sort's 4 range partitions
+        try:
+            df = spark.range(0, 200_000, 1, 8).selectExpr(
+                "id", "CAST(id * 7 AS STRING) AS s"
+            ).orderBy(F.col("id").desc())
+            ids = [
+                v
+                for b in Engine(spark).execute_stream(df, batch_rows=10_000)
+                for v in b.column("id").to_pylist()
+            ]
+        finally:
+            spark.conf.set(key, saved)
+        assert ids == list(range(199_999, -1, -1))
+        assert sum(1 for n in groups if n) >= 3, groups
+        assert 0 < pool.peak <= budget
