@@ -8,11 +8,10 @@ digest/bucket keys, and no all-pairs comparison without blocking.
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from datafusion_flight_sql_server_spark.engine.cache import BoundedCache
 
 
 def dedup_exact(df: DataFrame, key: str, id_col: str) -> DataFrame:
@@ -168,42 +167,16 @@ def _shingle_hash(sh):
 #: minhash_eval, threshold_curve + containment) re-derive the identical
 #: persisted shingle-set relation; within one sweep that is 6+ corpus-sized
 #: shingling passes for one deterministic result (round-6, VERDICT r5 #1).
-#: Entries hold PERSISTED DataFrames; eviction unpersists.
-_MINHASH_FRONTEND_CACHE: OrderedDict = OrderedDict()
-_MINHASH_FRONTEND_MAX = 4
-#: Per-entry materialization barrier (ADVICE r13): the creator's count()
-#: runs OUTSIDE the LRU lock, so a second thread could hit the cache while
-#: materialization is still in flight, see storageLevel already set, skip
-#: waiting, and re-expose the racing-AQE-futures recompute multiplier the
-#: eager count exists to eliminate. Hit-path callers wait on the entry's
-#: Event; the creator sets it in a finally so waiters never hang.
-_MINHASH_READY: dict = {}
-#: How long a cache hit waits for another thread's materialization before
-#: it raises ``TimeoutError`` instead of reading unmaterialized blocks.
-_MINHASH_READY_TIMEOUT_S = 300.0
-#: Guards lookup+insert as one unit: the Flight server handles requests on
-#: concurrent threads over one shared session, and an unguarded miss-miss
-#: race double-creates the front end — the loser's persisted relation is
-#: orphaned (never unpersisted, never shared). Building is lazy (no jobs),
-#: so holding the lock across the build is cheap.
-_MINHASH_CACHE_LOCK = threading.Lock()
+#: Entries hold PERSISTED, materialized DataFrames; eviction unpersists.
+#: Same-key callers wait for the one materializing build (ADVICE r13): a
+#: caller that read the relation mid-build would re-expose the racing-AQE
+#: recompute multiplier the eager count exists to eliminate.
+_MINHASH_FRONTENDS = BoundedCache(4, on_evict=lambda out: out[0].unpersist())
 
 
 def clear_minhash_frontend_cache() -> None:
-    """Unpersist and drop every cached MinHash front end.
-
-    Drains under ``_MINHASH_CACHE_LOCK``: a clear racing a locked
-    build/insert must not miss an entry inserted after its last popitem
-    (which would strand a persisted front end nothing ever unpersists).
-    """
-    with _MINHASH_CACHE_LOCK:
-        while _MINHASH_FRONTEND_CACHE:
-            key, (hashed, _s, _b) = _MINHASH_FRONTEND_CACHE.popitem()
-            _MINHASH_READY.pop(key, None)
-            try:
-                hashed.unpersist()
-            except Exception:  # session already stopped
-                pass
+    """Unpersist and drop every cached MinHash front end."""
+    _MINHASH_FRONTENDS.clear()
 
 
 def _minhash_hashed_buckets(
@@ -231,10 +204,9 @@ def _minhash_hashed_buckets(
 
     Round-8 hardening: the key folds in a filesystem fingerprint of the
     backing parquet (``corpus_fingerprint``), so regenerated fixtures
-    miss cleanly instead of serving the stale persisted corpus; lookup
-    and insert happen under ``_MINHASH_CACHE_LOCK`` as one unit, so
-    concurrent server threads cannot double-create (and orphan) a
-    persisted front end.
+    miss cleanly instead of serving the stale persisted corpus; the
+    cache builds each key once, so concurrent server threads cannot
+    double-create (and orphan) a persisted front end.
 
     Round 13: the persisted relation is MATERIALIZED (one count job)
     before it is handed to consumers. Lazy persist + AQE is a CPU
@@ -244,8 +216,7 @@ def _minhash_hashed_buckets(
     future recomputes the not-yet-cached shingling stage in full —
     stage metrics showed the ~25-CPU-s map stage executing 2-3x inside
     one query. The count pins the blocks once; every future then reads
-    cache. The count runs OUTSIDE the LRU lock (it is a job, and the
-    lock's contract is lazy builds only)."""
+    cache. A build whose count fails is unpersisted and not cached."""
     if cache_key is None:
         out = _minhash_build(
             docs, id_col, text_col, shingle_n, n_perms, n_bands, seed,
@@ -275,57 +246,27 @@ def _minhash_hashed_buckets(
         n_bands,
         seed,
     )
-    needs_materialize = False
-    with _MINHASH_CACHE_LOCK:
-        hit = _MINHASH_FRONTEND_CACHE.get(key)
-        if hit is not None:
-            _MINHASH_FRONTEND_CACHE.move_to_end(key)
-            lvl = hit[0].storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                # an external clearCache() (bench harness, embedder) dropped
-                # the persistence — re-assert it, or every consumer lineage
-                # recomputes the shingling pass from here on
-                from pyspark import StorageLevel
 
-                hit[0].persist(StorageLevel.MEMORY_AND_DISK)
-                needs_materialize = True
-                ready = _MINHASH_READY[key] = threading.Event()
-            else:
-                ready = _MINHASH_READY.get(key)
-            out = hit
-        else:
-            out = _minhash_build(
-                docs, id_col, text_col, shingle_n, n_perms, n_bands, seed,
-                cached=True,
-            )
-            _MINHASH_FRONTEND_CACHE[key] = out
-            needs_materialize = True
-            ready = _MINHASH_READY[key] = threading.Event()
-            while len(_MINHASH_FRONTEND_CACHE) > _MINHASH_FRONTEND_MAX:
-                old_key, (old_hashed, _s, _b) = _MINHASH_FRONTEND_CACHE.popitem(
-                    last=False
-                )
-                _MINHASH_READY.pop(old_key, None)
-                try:
-                    old_hashed.unpersist()
-                except Exception:  # session already stopped
-                    pass
-    if needs_materialize:
+    def build():
+        out = _minhash_build(
+            docs, id_col, text_col, shingle_n, n_perms, n_bands, seed,
+            cached=True,
+        )
         try:
             out[0].count()
-        finally:
-            ready.set()
-    elif ready is not None and not ready.is_set():
-        # another thread's materializing count() is in flight — wait for
-        # the blocks to land instead of racing AQE futures against them
-        # (bounded wait: a failed creator sets the event in its finally;
-        # a wait that runs out must not proceed on unmaterialized blocks)
-        if not ready.wait(timeout=_MINHASH_READY_TIMEOUT_S):
-            raise TimeoutError(
-                f"MinHash front end {cache_key!r} was not materialized "
-                f"within {_MINHASH_READY_TIMEOUT_S:.0f} s by the thread "
-                "building it"
-            )
+        except BaseException:
+            out[0].unpersist()
+            raise
+        return out
+
+    out = _MINHASH_FRONTENDS.get_or_build(key, build)
+    lvl = out[0].storageLevel
+    if not (lvl.useMemory or lvl.useDisk):
+        # an external clearCache() (bench harness, embedder) dropped the
+        # persistence — rebuild, or every consumer lineage recomputes the
+        # shingling pass from here on
+        _MINHASH_FRONTENDS.discard(key, out)
+        out = _MINHASH_FRONTENDS.get_or_build(key, build)
     return out
 
 

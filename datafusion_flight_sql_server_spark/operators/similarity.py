@@ -24,12 +24,11 @@ across engines and runs.
 from __future__ import annotations
 
 import hashlib
-import threading
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from datafusion_flight_sql_server_spark.engine.cache import BoundedCache
 from datafusion_flight_sql_server_spark.functions.vector import (
     cosine,
     dot,
@@ -519,32 +518,12 @@ def lsh_topk(
 #: round 6, VERDICT r5 #2. Entries are localCheckpointed 16-row
 #: DataFrames; holding the reference keeps their blocks alive, eviction
 #: just drops it (ContextCleaner reclaims the blocks).
-_CENTROID_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
-_CENTROID_CACHE_MAX = 4
-#: Guards the map itself (lookup/insert/evict), NOT the training:
-#: training runs eager Spark jobs (localCheckpoint), and holding a global
-#: lock across it would serialize cache HITS of other keys and trainings
-#: of unrelated corpora behind one multi-second training (ADVICE r8).
-#: Instead a miss inserts a per-key ``_PendingTrain`` placeholder under
-#: the lock and trains OUTSIDE it; concurrent callers of the SAME key
-#: wait on the placeholder (no double-train), while other keys proceed.
-_CENTROID_CACHE_LOCK = threading.Lock()
-
-
-class _PendingTrain:
-    """In-flight training marker: same-key callers wait; others don't."""
-
-    def __init__(self) -> None:
-        self.done = threading.Event()
-        self.result: "DataFrame | None" = None
-        self.error: BaseException | None = None
+_CENTROIDS = BoundedCache(4)
 
 
 def clear_centroid_cache() -> None:
-    """Drop every cached trained quantizer (in-flight trainings too —
-    their waiters hold the placeholder object directly, unaffected)."""
-    with _CENTROID_CACHE_LOCK:
-        _CENTROID_CACHE.clear()
+    """Drop every trained quantizer (in-flight trainings finish and stay)."""
+    _CENTROIDS.clear()
 
 
 def train_cells(
@@ -590,56 +569,12 @@ def train_cells(
             id_col,
             vec_col,
         )
-        with _CENTROID_CACHE_LOCK:
-            hit = _CENTROID_CACHE.get(key)
-            if hit is not None and not isinstance(hit, _PendingTrain):
-                _CENTROID_CACHE.move_to_end(key)
-                return hit
-            if hit is None:
-                hit = _PendingTrain()
-                _CENTROID_CACHE[key] = hit
-                owner = True
-            else:
-                owner = False
-        if not owner:
-            # same-key concurrent training in flight: wait for it rather
-            # than double-train (the loser's localCheckpointed centroids
-            # would leak blocks until ContextCleaner catches up)
-            hit.done.wait()
-            if hit.error is not None:
-                raise hit.error
-            return hit.result
-        try:
-            cents = _train_cells_build(
+        return _CENTROIDS.get_or_build(
+            key,
+            lambda: _train_cells_build(
                 emb, n_cells, train_iters, dim, id_col, vec_col
-            )
-        except BaseException as exc:
-            with _CENTROID_CACHE_LOCK:
-                if _CENTROID_CACHE.get(key) is hit:
-                    del _CENTROID_CACHE[key]  # next caller retrains
-            hit.error = exc
-            hit.done.set()
-            raise
-        with _CENTROID_CACHE_LOCK:
-            _CENTROID_CACHE[key] = cents
-            _CENTROID_CACHE.move_to_end(key)
-            while len(_CENTROID_CACHE) > _CENTROID_CACHE_MAX:
-                # pendings are never evicted: waiters hold the object,
-                # and dropping one would let a third caller double-train
-                old = next(
-                    (
-                        k
-                        for k, v in _CENTROID_CACHE.items()
-                        if not isinstance(v, _PendingTrain)
-                    ),
-                    None,
-                )
-                if old is None:
-                    break
-                del _CENTROID_CACHE[old]
-        hit.result = cents
-        hit.done.set()
-        return cents
+            ),
+        )
     return _train_cells_build(emb, n_cells, train_iters, dim, id_col, vec_col)
 
 

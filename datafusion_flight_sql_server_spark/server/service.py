@@ -54,12 +54,12 @@ Declared divergences (client-compat debugging starts here):
 from __future__ import annotations
 
 import uuid
-from collections import OrderedDict
 from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.flight as fl
 
+from datafusion_flight_sql_server_spark.engine.cache import BoundedCache
 from datafusion_flight_sql_server_spark.engine.core import Engine
 from datafusion_flight_sql_server_spark.plans.schema import (
     arrow_schema_for_df,
@@ -104,7 +104,10 @@ class FlightSqlServiceConfig:
     partitioned result, so clients stream big results over parallel DoGet
     calls instead of one driver-side iterator. The reference's client
     already merges multi-endpoint FlightInfos
-    (table-provider/src/lib.rs:43-53), as do ours and ADBC's."""
+    (table-provider/src/lib.rs:43-53), as do ours and ADBC's.
+
+    ``max_staged_results`` (>= 1) caps how many of those staged results
+    the server holds; the least recently used one is unpersisted first."""
 
     def __init__(
         self,
@@ -120,6 +123,12 @@ class FlightSqlServiceConfig:
         self.schema_with_metadata = schema_with_metadata
         self.batch_rows = batch_rows
         self.result_endpoints = result_endpoints
+        # below 1 every staged result would be evicted as it is issued,
+        # and each endpoint's DoGet would answer "unknown or expired"
+        if max_staged_results < 1:
+            raise ValueError(
+                f"max_staged_results must be >= 1, got {max_staged_results!r}"
+            )
         self.max_staged_results = max_staged_results
         # H3 strict mode: error on untypeable placeholders at
         # create_prepared_statement time (like DataFusion's
@@ -295,14 +304,13 @@ class FlightSqlServer(fl.FlightServerBase):
             provider = StaticSessionStateProvider(engine)
         self._provider = provider
         self.config = config or FlightSqlServiceConfig()
-        # Staged multi-endpoint results: result_id -> _StagedResult. Guarded
-        # by a lock (gRPC serves handlers on a thread pool); LRU-capped with
-        # unpersist-on-evict, and released early once every bucket has been
-        # fully streamed.
-        import threading
-
-        self._staged: "OrderedDict[str, _StagedResult]" = OrderedDict()
-        self._staged_lock = threading.Lock()
+        # Staged multi-endpoint results: result_id -> _StagedResult, an
+        # LRU of at most max_staged_results; eviction and shutdown()
+        # unpersist the staging.
+        self._staged = BoundedCache(
+            self.config.max_staged_results,
+            on_evict=lambda e: Engine.release_partitioned_result(e.staged),
+        )
 
     # -- context mint (service.rs:133-151) ----------------------------------
 
@@ -441,11 +449,7 @@ class FlightSqlServer(fl.FlightServerBase):
             df, self.config.result_endpoints
         )
         result_id = uuid.uuid4().hex
-        with self._staged_lock:
-            self._staged[result_id] = _StagedResult(staged, n_buckets, schema)
-            while len(self._staged) > self.config.max_staged_results:
-                _, old = self._staged.popitem(last=False)
-                Engine.release_partitioned_result(old.staged)
+        self._staged.put(result_id, _StagedResult(staged, n_buckets, schema))
         endpoints = [
             fl.FlightEndpoint(
                 fl.Ticket(
@@ -569,15 +573,12 @@ class FlightSqlServer(fl.FlightServerBase):
         endpoints legitimately — Spark replays a scan's partition tickets
         once per action, retries and speculative tasks replay them too, and
         the reference's stateless tickets allow infinite replay). Results
-        are only dropped by the ``max_staged_results`` LRU, whose eviction
-        unpersists the staging; a ticket outliving that gets a clean
-        'expired' error telling the client to re-issue GetFlightInfo — the
-        documented cost of the result affinity this mode trades for
-        fan-out."""
-        with self._staged_lock:
-            entry = self._staged.get(t.result_id)
-            if entry is not None:
-                self._staged.move_to_end(t.result_id)
+        are only dropped by the ``max_staged_results`` LRU and by
+        ``shutdown()``, both of which unpersist the staging; a ticket
+        outliving that gets a clean 'expired' error telling the client to
+        re-issue GetFlightInfo — the documented cost of the result affinity
+        this mode trades for fan-out."""
+        entry = self._staged.get(t.result_id)
         if entry is None:
             raise fl.FlightServerError(
                 f"unknown or expired partitioned result {t.result_id!r}; "
@@ -599,14 +600,7 @@ class FlightSqlServer(fl.FlightServerBase):
 
     def shutdown(self, *args, **kwargs):
         """Release staged multi-endpoint results, then stop serving."""
-        with self._staged_lock:
-            staged = list(self._staged.values())
-            self._staged.clear()
-        for entry in staged:
-            try:
-                Engine.release_partitioned_result(entry.staged)
-            except Exception:  # noqa: BLE001 - shutdown is best-effort
-                pass
+        self._staged.clear()
         return super().shutdown(*args, **kwargs)
 
     def _stream_df(self, engine: Engine, df) -> fl.FlightDataStream:

@@ -75,58 +75,6 @@ def _read_all_endpoints(port: int, sql: str) -> tuple[int, int]:
         ex.close()
 
 
-def _serve_engine(engine: Engine) -> FlightSqlServer:
-    srv = FlightSqlServer(engine, location="grpc://0.0.0.0:0")
-    threading.Thread(target=srv.serve, daemon=True).start()
-    deadline = time.time() + 10
-    while time.time() < deadline:
-        try:
-            fl.connect(f"grpc://localhost:{srv.port}").close()
-            break
-        except Exception:
-            time.sleep(0.05)
-    return srv
-
-
-def _prepared_roundtrip_latency(spark, plan_cache_size: int, reps: int = 30):
-    """Median prepared-statement round-trip (prepare → bind → DoGet) for a
-    tiny result, so planning latency dominates. The stateless protocol
-    plans the same SQL up to 3x per round trip (SURVEY §3/H5); the
-    plan cache is the opt-in lever that removes the repeats — any-replica
-    DoGet still works because the ticket carries the full SQL either way."""
-    import pyarrow as pa
-
-    srv = _serve_engine(Engine(spark, plan_cache_size=plan_cache_size))
-    try:
-        ex = FlightSQLExecutor(f"grpc://localhost:{srv.port}")
-        try:
-            sql = "SELECT id, val FROM wide WHERE id = $1"
-            # warm-up (JIT, first-plan, connection)
-            prepared = ex.prepare(sql)
-            prepared.bind(
-                pa.RecordBatch.from_pydict({"$1": pa.array([1], pa.int64())})
-            )
-            prepared.execute()
-            prepared.close()
-            samples = []
-            for i in range(reps):
-                t0 = time.perf_counter()
-                prepared = ex.prepare(sql)
-                prepared.bind(
-                    pa.RecordBatch.from_pydict(
-                        {"$1": pa.array([i % 100], pa.int64())}
-                    )
-                )
-                prepared.execute()
-                prepared.close()
-                samples.append(time.perf_counter() - t0)
-            return statistics.median(samples)
-        finally:
-            ex.close()
-    finally:
-        srv.shutdown()
-
-
 def main() -> int:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     n_eps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -156,15 +104,6 @@ def main() -> int:
         finally:
             srv.shutdown()
 
-    # Prepared-statement planning latency: plan cache off (reference
-    # parity: re-plan per RPC) vs on (SURVEY §7 H5 opt-in)
-    cold = _prepared_roundtrip_latency(spark, plan_cache_size=0)
-    warm = _prepared_roundtrip_latency(spark, plan_cache_size=64)
-    print(
-        f"prepared round-trip: {cold * 1000:.0f} ms uncached vs "
-        f"{warm * 1000:.0f} ms with plan cache "
-        f"({cold / warm:.1f}x)"
-    )
     spark.stop()
     return 0
 

@@ -851,6 +851,50 @@ class TestMultiEndpoint:
             ex.close()
             srv.shutdown()
 
+    def test_eviction_and_shutdown_unpersist_staged_results(self, spark):
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+        from datafusion_flight_sql_server_spark.protocol.state import (
+            PartitionedResultTicket,
+        )
+
+        def persisted(df) -> bool:
+            lvl = df.storageLevel
+            return lvl.useMemory or lvl.useDisk
+
+        srv = FlightSqlServer(
+            Engine(spark),
+            location="grpc://0.0.0.0:0",
+            config=FlightSqlServiceConfig(
+                result_endpoints=2, max_staged_results=1
+            ),
+        )
+        threading.Thread(target=srv.serve, daemon=True).start()
+        ex = FlightSQLExecutor(f"grpc://localhost:{srv.port}")
+
+        def stage(sql):
+            info = ex.flight_info(CommandStatementQuery(query=sql))
+            t = PartitionedResultTicket.try_decode(info.endpoints[0].ticket.ticket)
+            return srv._staged.get(t.result_id).staged
+
+        try:
+            first = stage("SELECT 1 AS x")
+            assert persisted(first)
+            second = stage("SELECT 2 AS y")  # evicts the first
+            assert not persisted(first)
+            assert persisted(second)
+        finally:
+            ex.close()
+            srv.shutdown()
+        assert not persisted(second)
+
+    def test_max_staged_results_below_one_rejected(self):
+        # a cap of 0 would evict every staged result as it is issued, so
+        # each endpoint's DoGet would answer "unknown or expired"
+        with pytest.raises(ValueError, match="max_staged_results"):
+            FlightSqlServiceConfig(result_endpoints=2, max_staged_results=0)
+
     def test_unknown_and_garbage_partition_tickets(self, multi_client):
         from datafusion_flight_sql_server_spark.protocol.state import (
             _PART_TICKET_MAGIC,

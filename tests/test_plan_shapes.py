@@ -702,6 +702,17 @@ class TestRound5AggRewrites:
             assert "Decimal" not in p, f"decimal partial agg in {name}: {p}"
 
 
+def _materialized(spark, df) -> bool:
+    """Whether ``df`` is cached AND its cached blocks are loaded."""
+    cached = (
+        spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    )
+    return not cached.isEmpty() and (
+        cached.get().cachedRepresentation().cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    )
+
+
 class TestMinhashFrontendCache:
     """Round 6 (VERDICT r5 #1): six registered queries share ONE persisted
     MinHash front end per (corpus, constants) — pin the cache contract."""
@@ -792,13 +803,13 @@ class TestMinhashFrontendCache:
             clear_minhash_frontend_cache()
 
     def test_concurrent_first_build_single_entry(self, spark):
-        # Round 8 (VERDICT r7 #7): lookup+insert are one locked unit —
+        # Round 8 (VERDICT r7 #7): the cache builds each key once —
         # threads racing the same key share ONE front end; a miss-miss
         # race would orphan a persisted twin.
         import threading
 
         from datafusion_flight_sql_server_spark.operators.dedup import (
-            _MINHASH_FRONTEND_CACHE,
+            _MINHASH_FRONTENDS,
             _minhash_hashed_buckets,
             clear_minhash_frontend_cache,
         )
@@ -832,7 +843,7 @@ class TestMinhashFrontendCache:
             assert not errors
             assert len(results) == 8
             assert len({id(r[0]) for r in results}) == 1
-            assert len(_MINHASH_FRONTEND_CACHE) == 1
+            assert len(_MINHASH_FRONTENDS) == 1
         finally:
             clear_minhash_frontend_cache()
 
@@ -842,30 +853,108 @@ class TestMinhashFrontendCache:
         # ROADMAP D.3: a cache hit whose wait for another thread's
         # materialization runs out must raise, naming the key, instead of
         # proceeding on blocks that were never materialized
+        import threading
+
+        from datafusion_flight_sql_server_spark.engine import cache
         from datafusion_flight_sql_server_spark.operators import dedup
         from datafusion_flight_sql_server_spark.queries.catalog import tables
         from tests.conftest import SF_SMALL
 
-        class _NeverReady:
-            def is_set(self):
-                return False
+        d = tables(spark, SF_SMALL)["documents"]
+        real_build = dedup._minhash_build
+        started, release = threading.Event(), threading.Event()
 
-            def wait(self, timeout=None):
-                return False
+        def stalled_build(*a, **kw):
+            started.set()
+            assert release.wait(60), "test orchestration stalled"
+            return real_build(*a, **kw)
+
+        cache_key = ("stalled", "documents")
+        args = (d, "doc_id", "text", 3, 16, 8, 42)
+        dedup.clear_minhash_frontend_cache()
+        monkeypatch.setattr(dedup, "_minhash_build", stalled_build)
+        monkeypatch.setattr(cache, "WAIT_TIMEOUT_S", 0.2)
+        creator = threading.Thread(
+            target=dedup._minhash_hashed_buckets,
+            args=args,
+            kwargs={"cache_key": cache_key},
+        )
+        creator.start()
+        try:
+            assert started.wait(60)
+            with pytest.raises(TimeoutError, match="stalled"):
+                dedup._minhash_hashed_buckets(*args, cache_key=cache_key)
+        finally:
+            release.set()
+            creator.join(120)
+            dedup.clear_minhash_frontend_cache()
+        assert not creator.is_alive()
+
+    def test_failed_build_is_not_cached(self, spark, monkeypatch):
+        # a front end whose materializing count() failed is unpersisted
+        # and dropped: the next caller builds again, never reusing a
+        # relation that was never materialized
+        from datafusion_flight_sql_server_spark.operators import dedup
+        from datafusion_flight_sql_server_spark.queries.catalog import tables
+        from tests.conftest import SF_SMALL
 
         d = tables(spark, SF_SMALL)["documents"]
+        real_build = dedup._minhash_build
+        failed: list = []
+
+        class _CountFails:
+            def __init__(self, hashed):
+                self.hashed = hashed
+
+            def count(self):
+                raise RuntimeError("count failed")
+
+            def unpersist(self):
+                failed.append(self.hashed.unpersist())
+
+        def fail_once(*a, **kw):
+            monkeypatch.setattr(dedup, "_minhash_build", real_build)
+            hashed, signed, bucketed = real_build(*a, **kw)
+            return _CountFails(hashed), signed, bucketed
+
+        args = (d, "doc_id", "text", 3, 16, 8, 42)
+        cache_key = ("fails-once", "documents")
         dedup.clear_minhash_frontend_cache()
-        cache_key = ("stalled", "documents")
+        monkeypatch.setattr(dedup, "_minhash_build", fail_once)
         try:
-            dedup._minhash_hashed_buckets(
-                d, "doc_id", "text", 3, 16, 8, 42, cache_key=cache_key
-            )
-            (key,) = dedup._MINHASH_READY
-            monkeypatch.setitem(dedup._MINHASH_READY, key, _NeverReady())
-            with pytest.raises(TimeoutError, match="stalled"):
-                dedup._minhash_hashed_buckets(
-                    d, "doc_id", "text", 3, 16, 8, 42, cache_key=cache_key
-                )
+            with pytest.raises(RuntimeError, match="count failed"):
+                dedup._minhash_hashed_buckets(*args, cache_key=cache_key)
+            assert len(failed) == 1  # the failed build was unpersisted
+            assert len(dedup._MINHASH_FRONTENDS) == 0
+            h, _s, _b = dedup._minhash_hashed_buckets(*args, cache_key=cache_key)
+            assert _materialized(spark, h)
+            assert len(dedup._MINHASH_FRONTENDS) == 1
+        finally:
+            dedup.clear_minhash_frontend_cache()
+
+    def test_hit_after_clear_cache_rebuilds_materialized(self, spark):
+        # bench.py calls spark.catalog.clearCache() between timings: the
+        # next hit must hand out a persisted AND materialized front end,
+        # or every consumer lineage recomputes the shingling pass
+        from datafusion_flight_sql_server_spark.operators import dedup
+        from datafusion_flight_sql_server_spark.queries.catalog import tables
+        from tests.conftest import SF_SMALL
+
+        d = tables(spark, SF_SMALL)["documents"]
+        args = (d, "doc_id", "text", 3, 16, 8, 42)
+        cache_key = ("cleared", "documents")
+        dedup.clear_minhash_frontend_cache()
+        try:
+            h1, _s, _b = dedup._minhash_hashed_buckets(*args, cache_key=cache_key)
+            assert _materialized(spark, h1)
+            spark.catalog.clearCache()
+            assert not h1.storageLevel.useMemory
+            h2, _s, _b = dedup._minhash_hashed_buckets(*args, cache_key=cache_key)
+            assert h2.storageLevel.useMemory
+            assert _materialized(spark, h2)
+            assert len(dedup._MINHASH_FRONTENDS) == 1
+            h3, _s, _b = dedup._minhash_hashed_buckets(*args, cache_key=cache_key)
+            assert h3 is h2
         finally:
             dedup.clear_minhash_frontend_cache()
 

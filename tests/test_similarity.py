@@ -389,11 +389,11 @@ class TestIvfTopK:
 
     def test_concurrent_training_single_entry(self, embeddings):
         # Round 8 (VERDICT r7 #7): racing threads must share ONE trained
-        # quantizer — the lock makes lookup+train+insert atomic.
+        # quantizer — the cache trains each key once.
         import threading
 
         from datafusion_flight_sql_server_spark.operators.similarity import (
-            _CENTROID_CACHE,
+            _CENTROIDS,
             clear_centroid_cache,
             train_cells,
         )
@@ -424,14 +424,14 @@ class TestIvfTopK:
             assert not errors
             assert len(results) == 4
             assert len({id(r) for r in results}) == 1
-            assert len(_CENTROID_CACHE) == 1
+            assert len(_CENTROIDS) == 1
         finally:
             clear_centroid_cache()
 
     def test_unrelated_keys_not_blocked_by_training(self, embeddings):
-        # ADVICE r8: the global lock guards the MAP, not the training —
+        # ADVICE r8: the cache lock guards the MAP, not the training —
         # a cache HIT of key B must return while key A's (slow) training
-        # is still in flight; same-key callers wait on the placeholder.
+        # is still in flight; same-key callers wait for that training.
         import threading
         import time
 
@@ -501,6 +501,43 @@ class TestIvfTopK:
             tb.join(120)
             clear_centroid_cache()
         assert not errors
+
+    def test_same_key_wait_is_bounded(self, embeddings, monkeypatch):
+        # ROADMAP D: a hung training must not stall every caller of the
+        # same key forever — the wait runs out with a TimeoutError that
+        # names the key
+        import threading
+
+        from datafusion_flight_sql_server_spark.engine import cache
+        from datafusion_flight_sql_server_spark.operators import similarity
+
+        started, release = threading.Event(), threading.Event()
+        real_build = similarity._train_cells_build
+
+        def hung_build(*a, **kw):
+            started.set()
+            assert release.wait(60), "test orchestration stalled"
+            return real_build(*a, **kw)
+
+        kw = dict(
+            n_cells=16, train_iters=1, dim=64, cache_key=("hung", "embeddings")
+        )
+        similarity.clear_centroid_cache()
+        monkeypatch.setattr(similarity, "_train_cells_build", hung_build)
+        monkeypatch.setattr(cache, "WAIT_TIMEOUT_S", 0.2)
+        trainer = threading.Thread(
+            target=similarity.train_cells, args=(embeddings,), kwargs=kw
+        )
+        trainer.start()
+        try:
+            assert started.wait(60)
+            with pytest.raises(TimeoutError, match="hung"):
+                similarity.train_cells(embeddings, **kw)
+        finally:
+            release.set()
+            trainer.join(120)
+            similarity.clear_centroid_cache()
+        assert not trainer.is_alive()
 
     def test_trained_deterministic_across_runs(self, embeddings):
         queries = embeddings.filter(F.col("vec_id") < 3)
