@@ -81,10 +81,18 @@ class FlightSQLExecutor:
         both implementations, so this goes one step past parity and asks it.
         Filters to base tables plus session temp views (the JDBC getTables
         convention — without the filter a catalog exposing views/system
-        tables would over-report them as queryable tables).
+        tables would over-report them as queryable tables). GetTables lists
+        every database, so a catalog table comes back qualified by its
+        database (``db.table``); a temp view, which has none, comes back bare.
         """
         tables = self.get_tables(table_types=["BASE TABLE", "TABLE", "TEMPORARY"])
-        return sorted(tables.column("table_name").to_pylist())
+        return sorted(
+            f"{db}.{name}" if db else name
+            for db, name in zip(
+                tables.column("db_schema_name").to_pylist(),
+                tables.column("table_name").to_pylist(),
+            )
+        )
 
     @property
     def dialect(self) -> str:

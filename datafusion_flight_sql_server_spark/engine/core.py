@@ -10,8 +10,9 @@ datafusion-flight-sql-server/src/service.rs:153-191):
   (service.rs:177-191): returns the DataFrame whose Arrow batches the caller
   streams.
 - catalog enumeration ≙ ``do_get_catalogs``/``schemas``/``tables``/
-  ``table_types`` (service.rs:616-731), materialized as DataFrames with the
-  Flight SQL metadata result schemas.
+  ``table_types`` (service.rs:616-731): plain rows from one job-free
+  listing over Spark's ``SHOW`` commands, which ``information_schema``
+  reads too; ``server/service.py`` owns the Arrow result schemas.
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ import re
 import threading
 from collections import deque
 
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import types as T
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_flight_sql_server_spark.plans.gate import SQLOptions
 from datafusion_flight_sql_server_spark.plans.params import bind_sql
@@ -308,51 +309,23 @@ class Engine:
         """
         return Engine(self.spark.newSession(), self.options)
 
-    # -- catalog metadata (Flight SQL result shapes) -------------------------
+    # -- catalog listing (Flight SQL metadata + information_schema) ---------
 
-    _CATALOGS_SCHEMA = T.StructType([T.StructField("catalog_name", T.StringType(), False)])
-    _SCHEMAS_SCHEMA = T.StructType(
-        [
-            T.StructField("catalog_name", T.StringType(), True),
-            T.StructField("db_schema_name", T.StringType(), False),
-        ]
-    )
-    _TABLES_SCHEMA = T.StructType(
-        [
-            T.StructField("catalog_name", T.StringType(), True),
-            T.StructField("db_schema_name", T.StringType(), True),
-            T.StructField("table_name", T.StringType(), False),
-            T.StructField("table_type", T.StringType(), False),
-        ]
-    )
-    _TABLE_TYPES_SCHEMA = T.StructType([T.StructField("table_type", T.StringType(), False)])
-
-    def get_catalogs(self) -> DataFrame:
-        """Catalog names (parity: do_get_catalogs, service.rs:616-636)."""
-        names = sorted(c.name for c in self.spark.catalog.listCatalogs())
-        return self.spark.createDataFrame(
-            [Row(catalog_name=n) for n in names], self._CATALOGS_SCHEMA
-        )
+    def get_catalogs(self) -> list[tuple[str]]:
+        """``(catalog_name,)`` rows (parity: do_get_catalogs,
+        service.rs:616-636)."""
+        return sorted((r[0],) for r in self.spark.sql("SHOW CATALOGS").collect())
 
     def get_db_schemas(
         self, catalog: str | None = None, db_schema_filter_pattern: str | None = None
-    ) -> DataFrame:
-        """Database/schema names with LIKE-pattern filter (parity:
+    ) -> list[tuple[str, str]]:
+        """``(catalog_name, db_schema_name)`` rows, LIKE-filtered (parity:
         do_get_schemas, service.rs:638-663)."""
-        current = self.spark.catalog.currentCatalog()
-        rows = [
-            Row(catalog_name=current, db_schema_name=d.name)
-            for d in self.spark.catalog.listDatabases()
+        return [
+            r
+            for r in self._schemas()
+            if catalog in (None, r[0]) and _sql_like(r[1], db_schema_filter_pattern)
         ]
-        if catalog is not None:
-            rows = [r for r in rows if r.catalog_name == catalog]
-        if db_schema_filter_pattern is not None:
-            rows = [
-                r
-                for r in rows
-                if _sql_like(r.db_schema_name, db_schema_filter_pattern)
-            ]
-        return self.spark.createDataFrame(rows, self._SCHEMAS_SCHEMA)
 
     def get_tables(
         self,
@@ -360,45 +333,61 @@ class Engine:
         db_schema_filter_pattern: str | None = None,
         table_name_filter_pattern: str | None = None,
         table_types: list[str] | None = None,
-    ) -> DataFrame:
-        """catalog × schema × table × type (parity: do_get_tables,
-        service.rs:665-706). Temp views surface with type TEMPORARY,
-        matching the reference's TableType mapping (service.rs:716-722)."""
-        current = self.spark.catalog.currentCatalog()
-        rows = []
-        for t in self.spark.catalog.listTables():
-            ttype = _table_type(t)
-            rows.append(
-                Row(
-                    catalog_name=t.catalog or current,
-                    db_schema_name=(t.namespace[0] if t.namespace else None),
-                    table_name=t.name,
-                    table_type=ttype,
-                )
-            )
-        if catalog is not None:
-            rows = [r for r in rows if r.catalog_name == catalog]
-        if db_schema_filter_pattern is not None:
-            rows = [
+    ) -> list[tuple[str, str | None, str, str]]:
+        """``(catalog_name, db_schema_name, table_name, table_type)`` rows
+        of the catalog listing (``_tables``), filtered and sorted (parity:
+        do_get_tables, service.rs:665-706, which walks catalog → schema →
+        table at :675-697). Temp views keep a NULL schema and type
+        TEMPORARY (service.rs:716-722); a schema pattern never matches
+        them."""
+        return sorted(
+            (
                 r
-                for r in rows
-                if r.db_schema_name is not None
-                and _sql_like(r.db_schema_name, db_schema_filter_pattern)
-            ]
-        if table_name_filter_pattern is not None:
-            rows = [r for r in rows if _sql_like(r.table_name, table_name_filter_pattern)]
-        if table_types:
-            rows = [r for r in rows if r.table_type in table_types]
-        rows.sort(key=lambda r: (r.catalog_name or "", r.db_schema_name or "", r.table_name))
-        return self.spark.createDataFrame(rows, self._TABLES_SCHEMA)
-
-    def get_table_types(self) -> DataFrame:
-        """Static table-type list (parity: do_get_table_types,
-        service.rs:708-731 — Base/View/Temporary)."""
-        return self.spark.createDataFrame(
-            [Row(table_type=t) for t in ("BASE TABLE", "VIEW", "TEMPORARY")],
-            self._TABLE_TYPES_SCHEMA,
+                for r in self._tables()
+                if catalog in (None, r[0])
+                and _sql_like(r[1], db_schema_filter_pattern)
+                and _sql_like(r[2], table_name_filter_pattern)
+                and (not table_types or r[3] in table_types)
+            ),
+            key=lambda r: (r[0], r[1] or "", r[2]),
         )
+
+    def get_table_types(self) -> list[tuple[str]]:
+        """``(table_type,)`` rows: every type ``_tables`` assigns (parity:
+        do_get_table_types, service.rs:708-731 — Base/View/Temporary)."""
+        return [(t,) for t in TABLE_TYPES]
+
+    def _schemas(self) -> list[tuple[str, str]]:
+        """``(catalog, database)`` for every database of the current
+        catalog."""
+        catalog = self.spark.catalog.currentCatalog()
+        return [(catalog, r[0]) for r in self.spark.sql("SHOW DATABASES").collect()]
+
+    def _tables(self) -> list[tuple[str, str | None, str, str]]:
+        """The catalog listing behind GetTables and information_schema:
+        one ``(catalog, db_schema, table_name, table_type)`` row per table
+        and view of every database, and one per session temp view, whose
+        ``db_schema`` is None. The type is BASE TABLE, VIEW or TEMPORARY.
+
+        Built on ``SHOW`` commands, which run no Spark job; PySpark's
+        ``Catalog.list*`` iterates a JVM Dataset with one job per
+        partition. ``SHOW TABLES`` repeats the temp views in every
+        database and does not tell views from tables, so ``SHOW VIEWS``
+        names the permanent views."""
+        rows: dict = {}
+        for catalog, db in self._schemas():
+            try:
+                tables = self.spark.sql(f"SHOW TABLES IN {self._bq(db)}").collect()
+                views = self.spark.sql(f"SHOW VIEWS IN {self._bq(db)}").collect()
+            except AnalysisException:
+                continue  # database dropped between list calls
+            views = {r[1] for r in views if not r[2]}
+            for _, name, temporary in tables:
+                if temporary:
+                    rows[catalog, None, name] = "TEMPORARY"
+                else:
+                    rows[catalog, db, name] = "VIEW" if name in views else "BASE TABLE"
+        return [(*key, ttype) for key, ttype in rows.items()]
 
     @staticmethod
     def _bq(name: str) -> str:
@@ -407,37 +396,21 @@ class Engine:
         SQL and its rows were silently dropped)."""
         return "`" + name.replace("`", "``") + "`"
 
-    def _catalog_tables(self) -> list:
-        """Every table/view across ALL databases, plus session temp
-        views (ADVICE round 10: bare ``listTables()`` only covers the
-        current database while ``schemata`` advertises every database,
-        so a client filtering ``table_schema = 'other_db'`` silently
-        got zero rows). Temp views repeat in every per-database
-        listing — dedup by identity."""
-        seen: dict = {}
-        try:
-            dbs = [d.name for d in self.spark.catalog.listDatabases()]
-        except Exception:
-            dbs = []
-        for db in dbs or [None]:
-            try:
-                tables = (
-                    self.spark.catalog.listTables(db)
-                    if db is not None
-                    else self.spark.catalog.listTables()
-                )
-            except Exception:
-                continue  # database dropped between list calls
-            for t in tables:
-                key = (t.catalog, tuple(t.namespace or ()), t.name)
-                seen.setdefault(key, t)
-        return list(seen.values())
+    @classmethod
+    def _ref(cls, row) -> str:
+        """SQL reference of a listing row: catalog tables are qualified by
+        database, so a temp view sharing the name does not shadow their
+        schema; backticks (escaped) keep dotted/special names single-part."""
+        _, db, name, _ = row
+        return f"{cls._bq(db)}.{cls._bq(name)}" if db else cls._bq(name)
 
     def info_schema_rows(self, rel: str) -> list[tuple]:
         """Rows for one virtualized ``information_schema`` relation
-        (``plans/dialect.py`` ``rewrite_information_schema``) — built
-        from the SAME live catalog the GetTables/GetDbSchemas RPCs
-        serve, so both discovery surfaces always agree. DataFusion
+        (``plans/dialect.py`` ``rewrite_information_schema``) — read from
+        the SAME catalog listing (``_tables``, ``_schemas``) the
+        GetTables/GetDbSchemas RPCs serve, so both discovery surfaces
+        always agree: the reference likewise answers both from one
+        catalog → schema → table walk (service.rs:675-697). DataFusion
         serves these views when the embedder enables them
         (SessionConfig::with_information_schema; the reference executes
         whatever that context parses, service.rs:171). Spellings that
@@ -449,64 +422,40 @@ class Engine:
         database: ANSI information_schema consumers filter with
         ``table_schema = '…'`` and a NULL schema would silently drop
         every row (the Flight GetTables RPC keeps NULL per its own
-        reference contract — the two surfaces share the catalog, not
+        reference contract — the two surfaces share the listing, not
         the NULL spelling).
 
-        Round 11: tables/views/columns enumerate EVERY database the
-        ``schemata`` relation advertises (ADVICE r10 — bare
-        ``listTables()`` covered only the current one), and the
-        per-table DESCRIBE cost behind ``columns``/``views`` is
-        memoized per session keyed by table identity, pruned to the
-        live listing each call (see
+        tables/views/columns enumerate EVERY database the ``schemata``
+        relation advertises, and the per-table DESCRIBE cost behind
+        ``columns``/``views`` is memoized per session keyed by the
+        listing row, pruned to the live listing each call (see
         :meth:`invalidate_info_schema_cache` for the staleness
         contract)."""
         current = self.spark.catalog.currentCatalog()
         db = self.spark.catalog.currentDatabase()
 
-        def _ref(t) -> str:
-            # qualify catalog tables by namespace so a temp view
-            # sharing the name does not shadow their schema;
-            # backticks (escaped) keep dotted/special names single-part
-            return (
-                f"{self._bq(t.namespace[0])}.{self._bq(t.name)}"
-                if t.namespace
-                else self._bq(t.name)
-            )
-
-        def _key(t) -> tuple:
-            return (t.catalog, tuple(t.namespace or ()), t.name, _table_type(t))
-
         if rel == "tables":
-            rows = [
-                (
-                    t.catalog or current,
-                    t.namespace[0] if t.namespace else db,
-                    t.name,
-                    _table_type(t),
-                )
-                for t in self._catalog_tables()
-            ]
+            rows = [(c, s or db, n, ttype) for c, s, n, ttype in self._tables()]
             rows += [
                 (current, "information_schema", r, "VIEW")
                 for r in ("tables", "views", "columns", "schemata", "df_settings")
             ]
-            return sorted(rows, key=lambda r: (r[0] or "", r[1] or "", r[2]))
+            return sorted(rows, key=lambda r: (r[0], r[1], r[2]))
         if rel == "views":
             memo = self._info_defs_memo
             fresh: dict = {}
 
             def _definition(t) -> str | None:
                 # permanent views record their SQL; temp views do not
-                if _table_type(t) != "VIEW":
+                if t[3] != "VIEW":
                     return None
-                key = _key(t)
-                if key in memo:
-                    fresh[key] = memo[key]
-                    return memo[key]
+                if t in memo:
+                    fresh[t] = memo[t]
+                    return memo[t]
                 text = None
                 try:
                     for r in self.spark.sql(
-                        f"DESCRIBE TABLE EXTENDED {_ref(t)}"
+                        f"DESCRIBE TABLE EXTENDED {self._ref(t)}"
                     ).collect():
                         if r[0] == "View Text":
                             text = r[1]
@@ -517,21 +466,16 @@ class Engine:
                     # so the next statement retries instead of pinning a
                     # NULL view_definition for the session (ADVICE r11)
                     return None
-                fresh[key] = text
+                fresh[t] = text
                 return text
 
             out = sorted(
                 (
-                    (
-                        t.catalog or current,
-                        t.namespace[0] if t.namespace else db,
-                        t.name,
-                        _definition(t),
-                    )
-                    for t in self._catalog_tables()
-                    if _table_type(t) in ("VIEW", "TEMPORARY")
+                    (t[0], t[1] or db, t[2], _definition(t))
+                    for t in self._tables()
+                    if t[3] != "BASE TABLE"
                 ),
-                key=lambda r: (r[0] or "", r[1] or "", r[2]),
+                key=lambda r: (r[0], r[1], r[2]),
             )
             self._info_defs_memo = fresh  # prune dropped views
             return out
@@ -539,14 +483,11 @@ class Engine:
             memo = self._info_cols_memo
             fresh = {}
             rows = []
-            for t in self._catalog_tables():
-                cat = t.catalog or current
-                schema_name = t.namespace[0] if t.namespace else db
-                key = _key(t)
-                cols = memo.get(key)
+            for t in self._tables():
+                cols = memo.get(t)
                 if cols is None:
                     try:
-                        fields = self.spark.table(_ref(t)).schema.fields
+                        fields = self.spark.table(self._ref(t)).schema.fields
                     except Exception:
                         continue  # dropped between list and describe
                     cols = [
@@ -558,23 +499,20 @@ class Engine:
                         )
                         for i, f in enumerate(fields, 1)
                     ]
-                fresh[key] = cols
+                fresh[t] = cols
                 rows.extend(
-                    (cat, schema_name, t.name, name, i, None, nullable, dtype)
+                    (t[0], t[1] or db, t[2], name, i, None, nullable, dtype)
                     for name, i, nullable, dtype in cols
                 )
             self._info_cols_memo = fresh  # prune dropped tables
-            return sorted(rows, key=lambda r: (r[0] or "", r[1] or "", r[2], r[4]))
+            return sorted(rows, key=lambda r: (r[0], r[1], r[2], r[4]))
         if rel == "schemata":
-            rows = [
-                (current, d.name, None, None, None, None)
-                for d in self.spark.catalog.listDatabases()
-            ]
+            rows = [(c, d, None, None, None, None) for c, d in self._schemas()]
             if not any(r[1] == "information_schema" for r in rows):
                 rows.append(
                     (current, "information_schema", None, None, None, None)
                 )
-            return sorted(rows, key=lambda r: (r[0] or "", r[1] or ""))
+            return sorted(rows, key=lambda r: (r[0], r[1]))
         if rel == "df_settings":
             return sorted(
                 (r["key"], r["value"]) for r in self.spark.sql("SET").collect()
@@ -586,14 +524,15 @@ class Engine:
         table-provider/src/lib.rs:91-101 — ``select * from {t} limit 1``)."""
         return self.spark.sql(f"SELECT * FROM {table} LIMIT 1").schema
 
-    def table_arrow_schema(self, table: str):
-        """Arrow schema of a registered table (GetTables include_schema path,
-        service.rs:689-691)."""
+    def table_arrow_schema(self, row):
+        """Arrow schema of one ``get_tables`` row, resolved by its qualified
+        reference (``_ref``), so a temp view does not shadow a same-named
+        table (GetTables include_schema path, service.rs:689-691)."""
         from datafusion_flight_sql_server_spark.plans.schema import (
             arrow_schema_for_df,
         )
 
-        return arrow_schema_for_df(self.spark.table(table))
+        return arrow_schema_for_df(self.spark.table(self._ref(row)))
 
     def plan_for_schema(self, sql: str) -> DataFrame:
         """Plan for schema derivation only: unbound placeholders are
@@ -620,16 +559,18 @@ class Engine:
         return self.sql_to_plan(handle.query, params)
 
 
-def _table_type(t) -> str:
-    if getattr(t, "isTemporary", False):
-        return "TEMPORARY"
-    if (t.tableType or "").upper() == "VIEW":
-        return "VIEW"
-    return "BASE TABLE"
+#: Every table type the catalog listing assigns, in GetTableTypes order.
+TABLE_TYPES = ("BASE TABLE", "VIEW", "TEMPORARY")
 
 
-def _sql_like(value: str, pattern: str) -> bool:
-    """SQL LIKE pattern match (% and _), as the Flight SQL filters expect."""
+def _sql_like(value: str | None, pattern: str | None) -> bool:
+    """SQL LIKE pattern match (% and _), as the Flight SQL filters expect.
+    An absent pattern matches everything; a present one never matches
+    NULL."""
+    if pattern is None:
+        return True
+    if value is None:
+        return False
     out = []
     for ch in pattern:
         if ch == "%":

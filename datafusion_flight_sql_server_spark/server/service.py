@@ -184,6 +184,14 @@ GET_TABLES_SCHEMA_WITH_SCHEMA = GET_TABLES_SCHEMA.append(
 )
 GET_TABLE_TYPES_SCHEMA = pa.schema([pa.field("table_type", pa.utf8(), nullable=False)])
 
+
+def _rows_stream(rows: list[tuple], schema: pa.Schema) -> fl.RecordBatchStream:
+    """One metadata result from the engine's plain rows, whose tuples are in
+    ``schema``'s column order."""
+    columns = list(zip(*rows)) or [() for _ in schema]
+    return fl.RecordBatchStream(pa.table(columns, schema=schema))
+
+
 #: GetSqlInfo result schema (Arrow Flight SQL spec): value is a dense union
 #: keyed by the spec's type codes. Only the string branch is populated by
 #: the minimal server-info fill below, but the full union shape is required
@@ -536,13 +544,19 @@ class FlightSqlServer(fl.FlightServerBase):
                 df = engine.sql_to_plan_prepared(handle)
                 return self._stream_df(engine, df)
             if isinstance(command, CommandGetCatalogs):
-                return self._get_catalogs(engine)
+                # service.rs:616-636
+                return _rows_stream(engine.get_catalogs(), GET_CATALOGS_SCHEMA)
             if isinstance(command, CommandGetDbSchemas):
-                return self._get_db_schemas(engine, command)
+                # service.rs:638-663
+                rows = engine.get_db_schemas(
+                    command.catalog, command.db_schema_filter_pattern
+                )
+                return _rows_stream(rows, GET_DB_SCHEMAS_SCHEMA)
             if isinstance(command, CommandGetTables):
                 return self._get_tables(engine, command)
             if isinstance(command, CommandGetTableTypes):
-                return self._get_table_types(engine)
+                # service.rs:708-731
+                return _rows_stream(engine.get_table_types(), GET_TABLE_TYPES_SCHEMA)
             if isinstance(command, CommandGetSqlInfo):
                 return fl.RecordBatchStream(_sql_info_table(command.info))
             raise NotImplementedError(
@@ -614,54 +628,19 @@ class FlightSqlServer(fl.FlightServerBase):
         batches = engine.execute_stream(df, batch_rows=self.config.batch_rows)
         return fl.GeneratorStream(schema, batches)
 
-    def _get_catalogs(self, engine: Engine) -> fl.FlightDataStream:
-        """service.rs:616-636."""
-        rows = [r.catalog_name for r in engine.get_catalogs().collect()]
-        table = pa.table({"catalog_name": rows}, schema=GET_CATALOGS_SCHEMA)
-        return fl.RecordBatchStream(table)
-
-    def _get_db_schemas(
-        self, engine: Engine, cmd: CommandGetDbSchemas
-    ) -> fl.FlightDataStream:
-        """service.rs:638-663."""
-        rows = engine.get_db_schemas(cmd.catalog, cmd.db_schema_filter_pattern).collect()
-        table = pa.table(
-            {
-                "catalog_name": [r.catalog_name for r in rows],
-                "db_schema_name": [r.db_schema_name for r in rows],
-            },
-            schema=GET_DB_SCHEMAS_SCHEMA,
-        )
-        return fl.RecordBatchStream(table)
-
-    def _get_tables(self, engine: Engine, cmd: CommandGetTables) -> fl.FlightDataStream:
+    @staticmethod
+    def _get_tables(engine: Engine, cmd: CommandGetTables) -> fl.FlightDataStream:
         """service.rs:665-706 (+ per-row IPC schema when include_schema)."""
         rows = engine.get_tables(
             cmd.catalog,
             cmd.db_schema_filter_pattern,
             cmd.table_name_filter_pattern,
             cmd.table_types or None,
-        ).collect()
-        columns = {
-            "catalog_name": [r.catalog_name for r in rows],
-            "db_schema_name": [r.db_schema_name for r in rows],
-            "table_name": [r.table_name for r in rows],
-            "table_type": [r.table_type for r in rows],
-        }
-        schema = GET_TABLES_SCHEMA
-        if cmd.include_schema:
-            schema = GET_TABLES_SCHEMA_WITH_SCHEMA
-            columns["table_schema"] = [
-                encode_schema(engine.table_arrow_schema(r.table_name)) for r in rows
-            ]
-        return fl.RecordBatchStream(pa.table(columns, schema=schema))
-
-    def _get_table_types(self, engine: Engine) -> fl.FlightDataStream:
-        """service.rs:708-731."""
-        rows = [r.table_type for r in engine.get_table_types().collect()]
-        return fl.RecordBatchStream(
-            pa.table({"table_type": rows}, schema=GET_TABLE_TYPES_SCHEMA)
         )
+        if not cmd.include_schema:
+            return _rows_stream(rows, GET_TABLES_SCHEMA)
+        rows = [(*r, encode_schema(engine.table_arrow_schema(r))) for r in rows]
+        return _rows_stream(rows, GET_TABLES_SCHEMA_WITH_SCHEMA)
 
     # -- DoPut --------------------------------------------------------------
 

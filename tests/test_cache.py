@@ -270,3 +270,20 @@ def test_cache_module_is_the_only_bounded_cache():
         "use engine/cache.py::BoundedCache instead of a hand-rolled LRU: "
         + "; ".join(sites)
     )
+
+
+def test_no_module_calls_the_catalog_list_api():
+    # PySpark's Catalog.list* iterate a JVM Dataset, one Spark job per
+    # partition; the catalog listing in engine/core.py uses SHOW commands
+    banned = {"listTables", "listDatabases", "listCatalogs"}
+    sites = [
+        f"{path.relative_to(PACKAGE.parent)}:{node.lineno} calls .{node.func.attr}("
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in banned
+    ]
+    assert not sites, "list the catalog with engine/core.py Engine._tables: " + (
+        "; ".join(sites)
+    )

@@ -1268,20 +1268,12 @@ class TestInfoSchemaProviderEdgeCases:
         catalog rejects such names (INVALID_ATTRIBUTE_NAME_SYNTAX), so
         this guards third-party catalog plugins: fake the listing and
         assert the reference handed to spark.table is escaped."""
-        from types import SimpleNamespace
-
         from datafusion_flight_sql_server_spark.engine.core import Engine
 
         assert Engine._bq("we`ird") == "`we``ird`"
         eng = Engine(spark)
-        fake = SimpleNamespace(
-            catalog="spark_catalog",
-            namespace=["od`d"],
-            name="we`ird",
-            tableType="MANAGED",
-            isTemporary=False,
-        )
-        monkeypatch.setattr(eng, "_catalog_tables", lambda: [fake])
+        fake = ("spark_catalog", "od`d", "we`ird", "BASE TABLE")
+        monkeypatch.setattr(eng, "_tables", lambda: [fake])
         refs = []
 
         def _table(ref):

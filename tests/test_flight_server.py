@@ -460,6 +460,126 @@ class TestCatalogSqlOverWire:
             client.execute("SET spark.sql.shuffle.partitions=1")
 
 
+@pytest.fixture
+def probe_db(spark):
+    """A second database holding a table and a view, dropped afterwards."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS probe_db")
+    spark.sql("CREATE TABLE IF NOT EXISTS probe_db.other_t (a INT) USING parquet")
+    spark.sql("CREATE OR REPLACE VIEW probe_db.pv AS SELECT 1 AS x")
+    yield "probe_db"
+    spark.sql("DROP DATABASE IF EXISTS probe_db CASCADE")
+
+
+class TestCatalogListing:
+    """GetCatalogs/GetDbSchemas/GetTables/GetTableTypes and
+    information_schema read one catalog listing (engine/core.py
+    ``Engine._tables``), built on job-free SHOW commands."""
+
+    def test_get_tables_spans_every_database(self, client, probe_db):
+        table = client.get_tables(db_schema_filter_pattern=probe_db)
+        rows = set(
+            zip(
+                table.column("db_schema_name").to_pylist(),
+                table.column("table_name").to_pylist(),
+                table.column("table_type").to_pylist(),
+            )
+        )
+        assert rows == {
+            (probe_db, "other_t", "BASE TABLE"),
+            (probe_db, "pv", "VIEW"),
+        }
+        # the federation client qualifies the table, so the name resolves
+        assert f"{probe_db}.other_t" in client.table_names()
+        assert client.execute(f"SELECT * FROM {probe_db}.other_t").num_rows == 0
+
+    def test_dropped_database_is_skipped(self, spark, monkeypatch):
+        spark.range(1).createOrReplaceTempView("listing_probe")
+        eng = Engine(spark)
+        listed = eng._schemas()
+        monkeypatch.setattr(
+            eng, "_schemas", lambda: [("spark_catalog", "gone_db")] + listed
+        )
+        try:
+            rows = eng._tables()
+        finally:
+            spark.catalog.dropTempView("listing_probe")
+        assert ("spark_catalog", None, "listing_probe", "TEMPORARY") in rows
+
+    def test_include_schema_resolves_shadowed_table(self, spark, client):
+        # a temp view must not lend its schema to the same-named table
+        spark.sql("CREATE TABLE default.shadow_t (a INT, b STRING) USING parquet")
+        spark.sql("CREATE OR REPLACE TEMPORARY VIEW shadow_t AS SELECT 1 AS x")
+        try:
+            table = client.get_tables(
+                table_name_filter_pattern="shadow_t", include_schema=True
+            )
+        finally:
+            spark.catalog.dropTempView("shadow_t")
+            spark.sql("DROP TABLE IF EXISTS default.shadow_t")
+        got = {
+            (db, ttype): [f.name for f in pa.ipc.read_schema(pa.py_buffer(raw))]
+            for db, ttype, raw in zip(
+                table.column("db_schema_name").to_pylist(),
+                table.column("table_type").to_pylist(),
+                table.column("table_schema").to_pylist(),
+            )
+        }
+        assert got == {
+            ("default", "BASE TABLE"): ["a", "b"],
+            (None, "TEMPORARY"): ["x"],
+        }
+
+    def test_discovery_surfaces_agree(self, spark, client, probe_db):
+        # GetTables spells a temp view's schema NULL, information_schema
+        # spells it as the current database and adds its own relations
+        current = spark.catalog.currentDatabase()
+        rpc = client.get_tables()
+        from_rpc = set(
+            zip(
+                [d or current for d in rpc.column("db_schema_name").to_pylist()],
+                rpc.column("table_name").to_pylist(),
+                rpc.column("table_type").to_pylist(),
+            )
+        )
+        sql = client.execute(
+            "SELECT table_schema, table_name, table_type "
+            "FROM information_schema.tables "
+            "WHERE table_schema <> 'information_schema'"
+        )
+        from_sql = set(zip(*(c.to_pylist() for c in sql.columns)))
+        assert (probe_db, "pv", "VIEW") in from_rpc
+        assert from_rpc == from_sql
+
+    def test_metadata_runs_no_catalog_list_or_dataframe(
+        self, spark, client, monkeypatch
+    ):
+        # PySpark's Catalog.list* run Spark jobs, and createDataFrame is a
+        # round trip the metadata RPCs do not need. The calls are recorded
+        # because an error handler could swallow a raise.
+        calls = []
+
+        def _forbidden(name):
+            def _raise(*a, **k):
+                calls.append(name)
+                raise AssertionError(f"{name} used by a metadata RPC")
+
+            return _raise
+
+        for name in ("listCatalogs", "listDatabases", "listTables"):
+            monkeypatch.setattr(type(spark.catalog), name, _forbidden(name))
+        monkeypatch.setattr(
+            type(spark), "createDataFrame", _forbidden("createDataFrame")
+        )
+        assert client.get_catalogs().num_rows >= 1
+        assert client.get_db_schemas().num_rows >= 1
+        tables = client.get_tables(include_schema=True)
+        assert {"users", "orders"} <= set(tables.column("table_name").to_pylist())
+        assert client.get_table_types().num_rows == 3
+        info = client.execute("SELECT table_name FROM information_schema.tables")
+        assert "users" in info.column("table_name").to_pylist()
+        assert not calls, calls
+
+
 class TestGetSqlInfo:
     def test_sql_info_minimal_fill(self, client):
         # parity-plus (reference stubs GetSqlInfo, service.rs:518-530):
